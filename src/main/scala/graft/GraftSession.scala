@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.streaming.GraftCheckpointFileManager
 
 /** Opinionated session factory: the configuration this library is
   * designed against, for both local[\*] and cluster deployments.
@@ -8,6 +9,14 @@ import org.apache.spark.sql.SparkSession
   * managed cluster can still override via spark-submit.
   */
 object GraftSession {
+
+  /** Streaming checkpoints on local paths written without forking
+    * `chmod`/`readlink` per file ([[GraftCheckpointFileManager]]). A
+    * user who builds their own SparkSession sets this to get the same.
+    */
+  val checkpointConf: Map[String, String] = Map(
+    GraftCheckpointFileManager.ConfKey ->
+      classOf[GraftCheckpointFileManager].getName)
 
   def builder(master: String = "local[*]",
       shufflePartitions: Int = Runtime.getRuntime.availableProcessors)
@@ -23,6 +32,7 @@ object GraftSession {
       // power-law keys (tokens, users) are the norm in this domain
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config(checkpointConf)
       .withExtensions(new GraftExtensions)
 
   def local(): SparkSession = {

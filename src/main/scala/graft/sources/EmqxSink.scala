@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, ForeachWriter, Row}
 import org.apache.spark.sql.types.StructType
 import graft.model.EmqxMessage
-import graft.sources.broker.BrokerRegistry
+import graft.sources.broker.{BrokerConf, BrokerRegistry, Publisher}
 
 /** EMQX publish path (SURVEY §2.1 C8) — the reverse direction of the
   * reference connector. Rows must carry the envelope columns
@@ -15,25 +15,37 @@ import graft.sources.broker.BrokerRegistry
   * broker call is the per-message network publish a real client
   * would make; batching happens naturally per partition).
   * Batch: `EmqxSink.publish(df, name)` via foreachPartition.
+  *
+  * `brokerName` is anything the `broker` option takes: a `mem:` /
+  * bare in-JVM name, or `tcp://host:port` / `ssl://host:port`.
   */
 class EmqxForeachWriter(brokerName: String) extends ForeachWriter[Row] {
   // field positions resolved once from the first row's schema (fixed
   // per query) — not a per-row linear scan over schema.names
   @transient private var resolver: EmqxSink.EnvelopeResolver = _
+  @transient private var out: Publisher = _
   override def open(partitionId: Long, epochId: Long): Boolean = {
-    resolver = null; true
+    resolver = null
+    out = EmqxSink.broker(brokerName).publisher()
+    true
   }
   override def process(row: Row): Unit = {
     if (resolver == null) resolver = new EmqxSink.EnvelopeResolver(row.schema)
-    BrokerRegistry.get(brokerName).publishAsync(resolver.toMessage(row))
+    out.publish(resolver.toMessage(row))
   }
   // pipelined QoS1/2 publishes must be acked before the epoch closes
   // cleanly; a flush failure throws → the task retries (at-least-once)
   override def close(errorOrNull: Throwable): Unit =
-    if (errorOrNull == null) BrokerRegistry.get(brokerName).flushPublishes()
+    if (errorOrNull == null) out.flush()
 }
 
 object EmqxSink {
+
+  /** The broker behind a `broker` option value — network URIs
+    * included, as the DSv2 sink resolves them.
+    */
+  private[sources] def broker(uri: String) =
+    BrokerRegistry.resolve(BrokerConf(uri))
 
   /** Resolves envelope column positions once per schema, so the
     * per-row path is positional gets only (the DSv2 writer does the
@@ -75,9 +87,9 @@ object EmqxSink {
   def publish(df: DataFrame, brokerName: String): Unit = {
     val resolver = new EnvelopeResolver(df.schema)
     df.foreachPartition { rows: Iterator[Row] =>
-      val broker = BrokerRegistry.get(brokerName)
-      rows.foreach(r => broker.publishAsync(resolver.toMessage(r)))
-      broker.flushPublishes() // partition done = all acks in
+      val out = broker(brokerName).publisher()
+      rows.foreach(r => out.publish(resolver.toMessage(r)))
+      out.flush() // partition done = all acks in
     }
   }
 }

@@ -222,6 +222,12 @@ class EmqxMicroBatchStream(conf: BrokerConf, baseClientid: String,
     }
     val ranges = clientids.map { c =>
       val from = s.getOrElse(c, broker.committedOffset(c))
+      // after a restart a network client numbers its redelivered
+      // backlog from 0 while `from` is the checkpoint's absolute
+      // offset: align first, or a backlog smaller than the consumed
+      // history reads as no new data and is never planned (no-op
+      // once this session has fetched, and for in-memory brokers)
+      broker.rebase(c, from)
       (c, from, broker.endOffset(c))
     }
     if (budget == Long.MaxValue)
@@ -428,7 +434,8 @@ class EmqxWriterFactory(conf: BrokerConf, schema: StructType,
 
   private def mkWriter(partitionId: Int, epochId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      private val broker = BrokerRegistry.resolve(conf)
+      // this writer's own flows: commit() waits on them and no others
+      private val out = BrokerRegistry.resolve(conf).publisher()
       // content-hash → count of identical rows seen so far in this
       // (query, epoch, partition). Retries replay the same multiset
       // of rows (possibly reordered), so hash+occurrence is a stable
@@ -470,13 +477,13 @@ class EmqxWriterFactory(conf: BrokerConf, schema: StructType,
           props += (graft.sources.broker.InMemoryBroker.DedupKeyProp ->
             s"$queryId/$epochId/$partitionId/$h/$n")
         }
-        broker.publishAsync(EmqxMessage(topic, qos, retained, props, payload))
+        out.publish(EmqxMessage(topic, qos, retained, props, payload))
       }
       // pipelined QoS1/2 publishes ride the wire up to the broker's
       // Receive Maximum; the acks must all be in before this task may
       // report success (flush throws → task retry, at-least-once)
       override def commit(): WriterCommitMessage = {
-        broker.flushPublishes()
+        out.flush()
         EmqxCommit
       }
       override def abort(): Unit = ()

@@ -117,7 +117,7 @@ object Mqtt5Codec {
   private def frame(out: OutputStream, tpe: Int, flags: Int, body: Array[Byte]): Unit = {
     val head = new Buf
     head.u8((tpe << 4) | (flags & 0x0f)).vbi(body.length)
-    out.write(head.bytes); out.write(body); out.flush()
+    out.write(head.bytes); out.write(body)
   }
 
   private def props(f: Buf => Unit): Array[Byte] = {
@@ -129,7 +129,16 @@ object Mqtt5Codec {
 
   // ---- encode ----
 
-  def write(out: OutputStream, p: Packet): Unit = p match {
+  def write(out: OutputStream, p: Packet): Unit = { encode(out, p); out.flush() }
+
+  /** Writes `ps` back to back and flushes once: a run of acks costs
+    * one socket write instead of one per packet.
+    */
+  def writeAll(out: OutputStream, ps: Iterable[Packet]): Unit = {
+    ps.foreach(encode(out, _)); out.flush()
+  }
+
+  private def encode(out: OutputStream, p: Packet): Unit = p match {
     case Connect(cid, clean, keepAlive, expiry, user, pass, am, ad) =>
       val b = new Buf
       b.str("MQTT").u8(5) // protocol name + version

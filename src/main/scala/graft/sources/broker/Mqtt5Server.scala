@@ -348,11 +348,15 @@ class Mqtt5Server(backing: InMemoryBroker, port: Int = 0,
             } else if (qos == 1) {
               if (noteInbound()) {
                 val complete: Runnable = () => {
-                  try {
-                    backing.publish(msg)
-                    send(PubAck(pid, 0))
-                  } catch { case _: Throwable => () }
-                  finally connInflight.decrementAndGet()
+                  val routed =
+                    try { backing.publish(msg); true }
+                    catch { case _: Throwable => false }
+                  // free the quota slot BEFORE the PUBACK leaves: a
+                  // client may open its next flow the moment the ack
+                  // lands, and counting that flow against a slot not
+                  // yet freed disconnects a compliant client (0x93)
+                  connInflight.decrementAndGet()
+                  if (routed) try send(PubAck(pid, 0)) catch { case _: Throwable => () }
                 }
                 val delay = inboundAckDelayMs
                 if (delay > 0)
@@ -364,12 +368,13 @@ class Mqtt5Server(backing: InMemoryBroker, port: Int = 0,
           case PubRel(pid, _) =>
             pendingQos2.synchronized(pendingQos2.remove(pid))
               .foreach(backing.publish)
-            send(PubComp(pid, 0))
-            // quota frees once PUBCOMP is sent (spec §4.9) — only for
-            // flows counted on this connection, not flows resumed from
-            // a previous connection of the same clientid
+            // quota frees with the PUBCOMP (spec §4.9), and before it
+            // is sent, as for PUBACK above — only for flows counted on
+            // this connection, not flows resumed from a previous
+            // connection of the same clientid
             if (countedQos2.synchronized(countedQos2.remove(pid)))
               connInflight.decrementAndGet()
+            send(PubComp(pid, 0))
           case PubAck(pid, _) => // qos1 delivery acked
             deliveryLock.synchronized {
               inflight.remove(pid).foreach(acked.add)

@@ -39,18 +39,16 @@ trait MqttBroker {
 
   def publish(msg: EmqxMessage): Unit
 
-  /** Pipelined publish: may return before the QoS1/2 wire ack; callers
-    * MUST call [[flushPublishes]] before treating the messages as
-    * durably handed off. Defaults to the synchronous [[publish]] for
-    * brokers with no wire round-trip to amortize (InMemoryBroker).
+  /** A new pipelined publisher for one writer (a sink task, a
+    * producer thread). Its flush waits on the flows it sent and no
+    * others, so writers sharing one broker never judge each other's
+    * acks. Defaults to the synchronous [[publish]] for brokers with no
+    * wire round-trip to amortize (InMemoryBroker).
     */
-  def publishAsync(msg: EmqxMessage): Unit = publish(msg)
-
-  /** Barrier for [[publishAsync]]: returns once every outstanding
-    * publish flow has completed, throwing if any cannot (so the
-    * caller's task retries — at-least-once).
-    */
-  def flushPublishes(): Unit = ()
+  def publisher(): Publisher = new Publisher {
+    override def publish(msg: EmqxMessage): Unit = MqttBroker.this.publish(msg)
+    override def flush(): Unit = ()
+  }
 
   /** End of the client's delivery sequence (next offset a new message
     * would get).
@@ -74,4 +72,16 @@ trait MqttBroker {
     * the first fetch/ack of the new session.
     */
   def rebase(clientid: String, seq: Long): Unit = ()
+}
+
+/** One writer's pipelined publishes. */
+trait Publisher {
+  /** May return before the QoS1/2 wire ack. */
+  def publish(msg: EmqxMessage): Unit
+
+  /** Returns once every flow sent through [[publish]] since the last
+    * flush has completed; throws if any cannot, so the caller's task
+    * retries (at-least-once).
+    */
+  def flush(): Unit
 }

@@ -121,6 +121,10 @@ class NetworkMqttBroker(conf: BrokerConf) extends MqttBroker {
       Mqtt5Codec.write(out, p)
     }
 
+    def sendAll(ps: Iterable[Packet]): Unit = writeLock.synchronized {
+      Mqtt5Codec.writeAll(out, ps)
+    }
+
     def allocPid(): Int = writeLock.synchronized {
       // skip ids still awaiting an ack: a wrapped counter landing on
       // an in-flight id would overwrite that waiter and orphan its
@@ -135,9 +139,15 @@ class NetworkMqttBroker(conf: BrokerConf) extends MqttBroker {
       p
     }
 
-    def await(pid: Int, what: String): Unit = {
+    /** Sends `p` and waits for the ack of its `pid`. The waiter is in
+      * place before the send: an ack that comes back before the
+      * caller could register would otherwise find no waiter, be
+      * dropped, and the call would time out.
+      */
+    def request(pid: Int, p: Packet, what: String): Unit = {
       val f = new CompletableFuture[Boolean]()
       waiters.put(pid, f)
+      send(p)
       val ok =
         try f.get(10, TimeUnit.SECONDS)
         catch {
@@ -362,15 +372,13 @@ class NetworkMqttBroker(conf: BrokerConf) extends MqttBroker {
   override def subscribe(clientid: String, filter: String, qos: Int): Unit = {
     val c = connOf(clientid)
     val pid = c.allocPid()
-    c.send(Subscribe(pid, Seq(filter -> qos)))
-    c.await(pid, "SUBACK")
+    c.request(pid, Subscribe(pid, Seq(filter -> qos)), "SUBACK")
   }
 
   override def unsubscribe(clientid: String, filter: String): Unit = {
     val c = connOf(clientid)
     val pid = c.allocPid()
-    c.send(Unsubscribe(pid, Seq(filter)))
-    c.await(pid, "UNSUBACK")
+    c.request(pid, Unsubscribe(pid, Seq(filter)), "UNSUBACK")
   }
 
   /** Publish via a dedicated anonymous connection (the sink path —
@@ -407,68 +415,86 @@ class NetworkMqttBroker(conf: BrokerConf) extends MqttBroker {
     }
   }
 
-  // in-flight pipelined publishes: ack futures awaiting completion at
-  // the next flushPublishes() barrier. Broker-level (not per-Conn) so
-  // flows stranded by a publisher reconnect still fail the flush
-  // loudly instead of vanishing with the dead Conn.
-  private val pendingAsync =
-    ConcurrentHashMap.newKeySet[CompletableFuture[Boolean]]()
-
-  /** Pipelined publish: QoS1/2 sends acquire a receive-quota permit
-    * and return without waiting for the ack — up to the broker's
-    * Receive Maximum flows ride the wire concurrently (ack
-    * pipelining), amortizing the round-trip the blocking [[publish]]
-    * pays per message. Completion is checked at [[flushPublishes]];
-    * at-least-once holds as long as callers flush before declaring
-    * the batch/epoch done (the sink writers flush on commit/close).
+  /** Pipelined publishes of one writer: QoS1/2 sends acquire a
+    * receive-quota permit and return without waiting for the ack — up
+    * to the broker's Receive Maximum flows ride the wire concurrently
+    * (ack pipelining), amortizing the round-trip the blocking
+    * [[publish]] pays per message. [[flush]] waits on this writer's
+    * own flows only: sink tasks sharing the registry-cached broker
+    * never wait on, clear or inherit each other's failures.
     */
-  override def publishAsync(msg: EmqxMessage): Unit = {
-    val c = publisherConn()
-    val qos = msg.qos & 3
-    if (qos > 0) {
-      c.acquireQuota()
-      val pid = c.allocPid()
-      val f = new CompletableFuture[Boolean]()
-      c.waiters.put(pid, f)
-      c.quotaHolders.add(pid)
-      pendingAsync.add(f)
-      c.send(Publish(msg.topic, qos, msg.retained, dup = false, pid,
-        msg.properties, msg.payload))
-    } else {
-      c.send(Publish(msg.topic, qos, msg.retained, dup = false, 0,
-        msg.properties, msg.payload))
-    }
-  }
+  private final class PipelinedPublisher extends Publisher {
+    // ack futures awaiting the next flush(). Held here, not on the
+    // Conn, so flows stranded by a publisher reconnect still fail
+    // this writer's flush loudly instead of vanishing with the Conn.
+    private val pending =
+      ConcurrentHashMap.newKeySet[CompletableFuture[Boolean]]()
 
-  /** Barrier for [[publishAsync]]: waits until every outstanding
-    * QoS1/2 flow has completed its wire ack. Throws if any flow fails
-    * to complete within the deadline (dead socket, broker gone) — the
-    * caller's task fails and retries, preserving at-least-once.
-    */
-  override def flushPublishes(): Unit = {
-    // Drain EVERY entry before throwing: a stranded flow (timeout or
-    // connection death) must not stay behind to poison the retry's
-    // flush — the failed flow's rows are re-published by the retry,
-    // so clearing its future loses nothing (at-least-once).
-    var failure: Throwable = null
-    val it = pendingAsync.iterator()
-    while (it.hasNext) {
-      val f = it.next()
-      try {
-        if (!f.get(10, TimeUnit.SECONDS) && failure == null)
-          failure = new IllegalStateException(
-            "pipelined publish lost its connection before the ack — " +
-              "failing so the task retries (at-least-once)")
-      } catch {
-        case _: TimeoutException =>
-          if (failure == null) failure = new IllegalStateException(
-            "pipelined publish not acked within 10s — failing so the " +
-              "task retries (at-least-once)")
+    override def publish(msg: EmqxMessage): Unit = {
+      val c = publisherConn()
+      val qos = msg.qos & 3
+      if (qos > 0) {
+        c.acquireQuota()
+        val pid = c.allocPid()
+        val f = new CompletableFuture[Boolean]()
+        c.waiters.put(pid, f)
+        c.quotaHolders.add(pid)
+        pending.add(f)
+        c.send(Publish(msg.topic, qos, msg.retained, dup = false, pid,
+          msg.properties, msg.payload))
+      } else {
+        c.send(Publish(msg.topic, qos, msg.retained, dup = false, 0,
+          msg.properties, msg.payload))
       }
-      it.remove()
     }
-    if (failure != null) throw failure
+
+    /** Waits until every flow this publisher sent has completed its
+      * wire ack. Throws if any fails to complete within the deadline
+      * (dead socket, broker gone) — the caller's task fails and
+      * retries, preserving at-least-once.
+      */
+    override def flush(): Unit = {
+      // Drain EVERY entry before throwing: a stranded flow (timeout or
+      // connection death) must not stay behind to poison the retry's
+      // flush — the failed flow's rows are re-published by the retry,
+      // so clearing its future loses nothing (at-least-once).
+      var failure: Throwable = null
+      val it = pending.iterator()
+      while (it.hasNext) {
+        val f = it.next()
+        try {
+          if (!f.get(10, TimeUnit.SECONDS) && failure == null)
+            failure = new IllegalStateException(
+              "pipelined publish lost its connection before the ack — " +
+                "failing so the task retries (at-least-once)")
+        } catch {
+          case _: TimeoutException =>
+            if (failure == null) failure = new IllegalStateException(
+              "pipelined publish not acked within 10s — failing so the " +
+                "task retries (at-least-once)")
+        }
+        it.remove()
+      }
+      if (failure != null) throw failure
+    }
   }
+
+  override def publisher(): Publisher = new PipelinedPublisher
+
+  // one publisher for a caller that owns this broker handle outright
+  // (a producer thread); concurrent writers each take a publisher()
+  private val sharedPublisher = new PipelinedPublisher
+
+  /** Pipelined publish: may return before the QoS1/2 wire ack; the
+    * caller MUST call [[flushPublishes]] before treating the messages
+    * as durably handed off.
+    */
+  def publishAsync(msg: EmqxMessage): Unit = sharedPublisher.publish(msg)
+
+  /** Barrier for [[publishAsync]]: returns once every flow sent
+    * through it has completed, throwing if any cannot.
+    */
+  def flushPublishes(): Unit = sharedPublisher.flush()
 
   private val pubClientid =
     "graft-pub-" + java.util.UUID.randomUUID().toString.take(8)
@@ -547,17 +573,24 @@ class NetworkMqttBroker(conf: BrokerConf) extends MqttBroker {
       val c = conns.get(clientid)
       if (c == null) return
       val eff = math.min(upTo, c.fetchedUpTo) // only fetched data
-      val n = math.min(math.max(eff - c.baseSeq, 0), c.buffer.length).toInt
+      // compare before subtracting: nothing fetched yet leaves
+      // fetchedUpTo at Long.MinValue, and MinValue - baseSeq wraps to
+      // a huge positive count once rebase has moved baseSeq above 0
+      if (eff <= c.baseSeq) return
+      val n = math.min(eff - c.baseSeq, c.buffer.length).toInt
       if (n == 0) return
       val slice = c.buffer.take(n).toSeq
       c.buffer.remove(0, n)
       c.baseSeq += n
       (c, slice)
     }
-    toAck.foreach { case (_, pid, qos) =>
-      if (qos == 1) conn.send(PubAck(pid, 0))
-      else if (qos == 2) conn.send(PubRec(pid, 0)) // PUBREL/PUBCOMP async
+    // one lock hold and one socket flush for the whole run: acks run
+    // on the stream thread inside the batch commit
+    val acks = toAck.collect {
+      case (_, pid, 1) => PubAck(pid, 0)
+      case (_, pid, 2) => PubRec(pid, 0) // PUBREL/PUBCOMP async
     }
+    if (acks.nonEmpty) conn.sendAll(acks)
   }
 
   override def rebase(clientid: String, seq: Long): Unit = synchronized {

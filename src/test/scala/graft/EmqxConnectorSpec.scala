@@ -3,12 +3,17 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, CommitLog, HDFSMetadataLog, OffsetSeqLog}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.EmqxMessage
 import graft.sources.TopicMatcher
 import graft.sources.broker.BrokerRegistry
-import graft.sources.{EmqxForeachWriter, EmqxSink}
+import graft.sources.{EmqxForeachWriter, EmqxOffset, EmqxSink}
+import graft.streaming.{GraftCheckpointFileManager, NioLocalFileSystem}
 
 /** Connector coverage mirroring the reference's integration tests
   * (EMQXSourceIntegrationTest.java): message delivery across parallel
@@ -309,6 +314,115 @@ class EmqxConnectorSpec extends AnyFunSuite {
       assert(got.get("counts/spark").contains("3"), s"got: $got")
       assert(got.get("counts/flink").contains("2"), s"got: $got")
     } finally q.stop()
+  }
+
+  // ---- checkpoint files: GraftSession's manager vs Spark's default ----
+
+  /** A session on the shared context with GraftSession's checkpoint
+    * conf, next to the plain test session.
+    */
+  private lazy val graftSpark = {
+    val s = spark.newSession()
+    GraftSession.checkpointConf.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
+
+  /** The managers behind a query's offset and commit logs (the
+    * accessor is protected in Scala, public in bytecode).
+    */
+  private def fileManagers(q: StreamingQuery): Seq[CheckpointFileManager] = {
+    val se = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+    val get = classOf[HDFSMetadataLog[_]].getMethod("fileManager")
+    Seq(se.offsetLog, se.commitLog)
+      .map(get.invoke(_).asInstanceOf[CheckpointFileManager])
+  }
+
+  private def isGraftLocal(fm: CheckpointFileManager): Boolean = fm match {
+    case g: GraftCheckpointFileManager =>
+      g.localFileSystem.exists(_.isInstanceOf[NioLocalFileSystem])
+    case _ => false
+  }
+
+  test("GraftSession checkpoints: graft manager writes the same files and modes; a plain session reads them") {
+    val name = freshBroker()
+    val b = BrokerRegistry.get(name)
+    // one stateful query per session kind over the same messages: the
+    // offset log, commit log, metadata and state-store deltas of each
+    def start(s: SparkSession, tag: String, ckpt: String) =
+      s.readStream.format("emqx")
+        .option("broker", name).option("clientid", s"$tag-")
+        .option("group", tag).option("topicfilter", "fmt/#")
+        .option("readers", 1).load()
+        .groupBy("topic").count()
+        .writeStream.format("memory").queryName(s"ckpt_fmt_$tag")
+        .outputMode("complete")
+        .option("checkpointLocation", ckpt).start()
+    val plainCkpt = Files.createTempDirectory("ckpt-plain-").toString
+    val graftCkpt = Files.createTempDirectory("ckpt-graft-").toString
+    val qp = start(spark, "fmtp", plainCkpt)
+    val qg = start(graftSpark, "fmtg", graftCkpt)
+    try {
+      waitForSessions(b, Seq("fmtp-0", "fmtg-0"))
+      (0 until 2).foreach { round =>
+        (0 until 5).foreach(i => b.publish(msg(s"fmt/t$i", s"r$round")))
+        qp.processAllAvailable()
+        qg.processAllAvailable()
+      }
+      assert(fileManagers(qg).forall(isGraftLocal),
+        s"graft session logs: ${fileManagers(qg).map(_.getClass)}")
+      assert(!fileManagers(qp).exists(_.isInstanceOf[GraftCheckpointFileManager]))
+    } finally { qp.stop(); qg.stop() }
+
+    def mode(root: String, f: String) = java.nio.file.attribute
+      .PosixFilePermissions.toString(
+        Files.getPosixFilePermissions(java.nio.file.Paths.get(root, f)))
+    val files = Seq("metadata", ".metadata.crc", "offsets", "commits",
+      "offsets/0", "offsets/.0.crc", "commits/0", "commits/.0.crc",
+      "state/0/0/1.delta", "state/0/0/.1.delta.crc")
+    files.foreach { f =>
+      assert(Files.exists(java.nio.file.Paths.get(graftCkpt, f)), s"graft run wrote no $f")
+      assert(mode(graftCkpt, f) == mode(plainCkpt, f), s"mode of $f")
+    }
+
+    // Spark's own readers in a plain session read what the graft
+    // manager wrote
+    val offsets = new OffsetSeqLog(spark, s"$graftCkpt/offsets").getLatest()
+    val commits = new CommitLog(spark, s"$graftCkpt/commits").getLatest()
+    assert(offsets.isDefined && commits.isDefined)
+    assert(commits.get._1 == offsets.get._1)
+    val end = EmqxOffset.fromJson(offsets.get._2.offsets.head.get.json)
+    assert(end.positions == Map("fmtg-0" -> 10L), s"offsets: $end")
+  }
+
+  test("checkpoints resume across a plain session and GraftSession, both ways, with no loss") {
+    for ((first, second, tag) <- Seq(
+        (spark, graftSpark, "p2g"), (graftSpark, spark, "g2p"))) {
+      val name = freshBroker()
+      val b = BrokerRegistry.get(name)
+      val ckpt = Files.createTempDirectory(s"ckpt-$tag-").toString
+      RecoveryCollector.clear()
+      def start(s: SparkSession) = s.readStream.format("emqx")
+        .option("broker", name).option("clientid", s"$tag-")
+        .option("group", "g").option("topicfilter", "t/#")
+        .option("readers", 2).load()
+        .writeStream.foreach(new RecoveryCollector)
+        .option("checkpointLocation", ckpt).start()
+
+      val q1 = start(first)
+      waitForSessions(b, Seq(s"$tag-0", s"$tag-1"))
+      (0 until 10).foreach(i => b.publish(msg("t/a", s"m$i")))
+      q1.processAllAvailable()
+      q1.stop()
+      (10 until 20).foreach(i => b.publish(msg("t/a", s"m$i")))
+      val q2 = start(second)
+      try {
+        q2.processAllAvailable()
+        assert(fileManagers(q2).forall(isGraftLocal) == (second eq graftSpark))
+      } finally q2.stop()
+      val seen = RecoveryCollector.seen()
+      val all = (0 until 20).map(i => s"m$i").toSet
+      assert(seen == all, s"$tag lost: ${all -- seen}")
+    }
   }
 }
 

@@ -4,6 +4,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.model.EmqxMessage
+import graft.sources.{EmqxForeachWriter, EmqxSink}
 import graft.sources.broker._
 import graft.sources.broker.Mqtt5Codec._
 
@@ -517,6 +518,66 @@ class Mqtt5NetworkSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally producer.closeAll()
   }
 
+  test("a writer's flush covers its own flows: another writer's neither waits on nor absorbs them") {
+    // sink tasks in one JVM share the registry-cached broker; each
+    // takes its own publisher, so task B's commit must not wait on,
+    // clear or be failed by task A's flows (nor A's failure land on B)
+    val backing = new InMemoryBroker
+    backing.connect("pw-sub", cleanStart = true)
+    backing.subscribe("pw-sub", "pw/#", 1)
+    val server = new Mqtt5Server(backing)
+    // holds QoS1 PUBACKs (and routing) only: A's QoS1 flows stay open
+    // while B's QoS2 flows complete at once
+    server.inboundAckDelayMs = 30000
+    val broker = new NetworkMqttBroker(BrokerConf(s"tcp://127.0.0.1:${server.actualPort}"))
+    try {
+      val a = broker.publisher()
+      val b = broker.publisher()
+      (0 until 3).foreach(i => a.publish(EmqxMessage(s"pw/a$i", 1,
+        retained = false, Map.empty, s"a$i".getBytes("UTF-8"))))
+      (0 until 3).foreach(i => b.publish(EmqxMessage(s"pw/b$i", 2,
+        retained = false, Map.empty, s"b$i".getBytes("UTF-8"))))
+      b.flush() // must not wait for A's held acks
+      val routed = backing.fetch("pw-sub", 0, backing.endOffset("pw-sub"))
+      assert(routed.map(_.topic).sorted == Seq("pw/b0", "pw/b1", "pw/b2"),
+        "B's flush returned only once A's flows had completed")
+
+      server.close() // A's flows lose their connection un-acked
+      intercept[IllegalStateException] { a.flush() }
+    } finally { broker.closeAll(); server.close() }
+  }
+
+  test("EmqxForeachWriter and EmqxSink.publish deliver to a tcp:// broker") {
+    // both used to resolve the URI as the NAME of an in-JVM broker:
+    // rows "published" without error and reached no one
+    withServer { (backing, _, conf) =>
+      val spark = SparkTestSession.spark
+      import spark.implicits._
+      implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      backing.connect("fw-sub", cleanStart = true)
+      backing.subscribe("fw-sub", "fw/#", 1)
+      def envelope(df: org.apache.spark.sql.DataFrame) =
+        df.selectExpr("_1 AS topic", "1 AS qos", "cast(_2 AS binary) AS payload")
+
+      EmqxSink.publish(envelope(Seq(("fw/batch/1", "p1"), ("fw/batch/2", "p2"))
+        .toDF()), conf.uri)
+
+      val in = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[(String, String)]
+      val q = envelope(in.toDF()).writeStream
+        .foreach(new EmqxForeachWriter(conf.uri)).start()
+      try {
+        in.addData(("fw/stream/1", "s1"), ("fw/stream/2", "s2"))
+        q.processAllAvailable()
+      } finally q.stop()
+
+      val got = backing.fetch("fw-sub", 0, backing.endOffset("fw-sub"))
+        .map(m => m.topic -> new String(m.payload, "UTF-8")).toSet
+      assert(got == Set("fw/batch/1" -> "p1", "fw/batch/2" -> "p2",
+        "fw/stream/1" -> "s1", "fw/stream/2" -> "s2"), s"got: $got")
+    }
+  }
+
   test("SCRAM-SHA-256 matches the RFC 7677 test vector on both sides") {
     // the published RFC 7677 §3 example exchange, pinned end-to-end:
     // any drift in Hi/HMAC/AuthMessage construction fails here before
@@ -830,6 +891,59 @@ class Mqtt5NetworkSpec extends AnyFunSuite with BeforeAndAfterAll {
             assert(seen.contains(s"a$i"), s"lost pre-stop a$i")
             assert(seen.contains(s"b$i"), s"lost offline b$i")
           }
+        }
+      } finally q2.stop()
+      producer.closeAll()
+    }
+  }
+
+  test("restart from a checkpoint plans a redelivered backlog smaller than the consumed history") {
+    // after a restart the client numbers the redelivered backlog from
+    // 0 while the checkpoint holds absolute offsets; under a batch cap
+    // a backlog shorter than the consumed history used to read as "no
+    // new data" and was never planned
+    withServer { (_, _, conf) =>
+      val spark = SparkTestSession.spark
+      val ckpt = java.nio.file.Files.createTempDirectory("stall-ckpt").toString
+      CountingCollector.clear()
+      def startQuery() = spark.readStream.format("emqx")
+        .option("broker", conf.uri)
+        .option("clientid", "stall-")
+        .option("group", "gst").option("topicfilter", "st/#")
+        .option("qos", 1).option("readers", 1)
+        .option("maxmessagesperbatch", 100)
+        .load()
+        .writeStream.foreach(new CountingCollector)
+        .option("checkpointLocation", ckpt).start()
+
+      val producer = new NetworkMqttBroker(conf)
+      val q1 = startQuery()
+      try {
+        eventually(15000) {
+          producer.publish(EmqxMessage("st/warm", 1, retained = false,
+            Map.empty, "warm".getBytes("UTF-8")))
+          q1.processAllAvailable()
+          assert(CountingCollector.counts().nonEmpty)
+        }
+        (0 until 20).foreach(i => producer.publish(EmqxMessage(s"st/a$i", 1,
+          retained = false, Map.empty, s"a$i".getBytes("UTF-8"))))
+        eventually(15000) {
+          q1.processAllAvailable()
+          val counts = CountingCollector.counts()
+          (0 until 20).foreach(i => assert(counts.contains(s"a$i")))
+        }
+      } finally q1.stop()
+
+      // 5 < the 21+ consumed before the stop
+      (0 until 5).foreach(i => producer.publish(EmqxMessage(s"st/b$i", 1,
+        retained = false, Map.empty, s"b$i".getBytes("UTF-8"))))
+      val q2 = startQuery()
+      try {
+        eventually(20000) {
+          q2.processAllAvailable()
+          val counts = CountingCollector.counts()
+          (0 until 5).foreach(i => assert(counts.get(s"b$i").contains(1),
+            s"b$i seen ${counts.get(s"b$i")} times"))
         }
       } finally q2.stop()
       producer.closeAll()

@@ -1202,4 +1202,47 @@ class StreamingSpec extends AnyFunSuite {
       assert(spark.table("holdout_out").columns.contains("ts"))
     } finally q.stop()
   }
+
+  test("checkpoint manager: local paths get the NIO-mode file system, other schemes Spark's own pick") {
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
+    import graft.streaming.{GraftCheckpointFileManager, NioLocalFileSystem}
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    val dir = java.nio.file.Files.createTempDirectory("ckpt-mgr-")
+    // a plain LocalFileSystem sits in Hadoop's JVM-wide cache first
+    assert(FileSystem.get(dir.toUri, conf).isInstanceOf[LocalFileSystem])
+    for (p <- Seq(new Path(dir.toUri), new Path(dir.toString))) {
+      val m = new GraftCheckpointFileManager(p, conf)
+      assert(m.delegate.isInstanceOf[FileSystemBasedCheckpointFileManager])
+      assert(m.localFileSystem.exists(_.isInstanceOf[NioLocalFileSystem]),
+        s"$p: ${m.localFileSystem.map(_.getClass)}")
+    }
+    // a user's own file:// implementation is left alone
+    val own = new Configuration(conf)
+    own.set("fs.file.impl", classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
+    val ownPath = new Path(dir.toUri)
+    assert(new GraftCheckpointFileManager(ownPath, own).delegate.getClass ==
+      CheckpointFileManager.create(ownPath, own).getClass)
+    // any other scheme: exactly the class Spark picks without graft.
+    // "other" is a local-backed scheme with a FileContext binding, so
+    // Spark's pick differs from the local manager and needs no server
+    val other = new Configuration(conf)
+    other.set("fs.AbstractFileSystem.other.impl", classOf[OtherSchemeFs].getName)
+    val otherPath = new Path("other:///ckpt")
+    val sparks = CheckpointFileManager.create(otherPath, other)
+    val ours = new GraftCheckpointFileManager(otherPath, other)
+    assert(ours.delegate.getClass == sparks.getClass)
+    assert(ours.localFileSystem.isEmpty)
+    assert(!sparks.isInstanceOf[FileSystemBasedCheckpointFileManager],
+      s"Spark picked ${sparks.getClass}: the check would not tell the two apart")
+  }
 }
+
+/** FileContext binding for a scheme named "other", backed by local
+  * files: a non-`file` scheme for which Spark picks its FileContext
+  * checkpoint manager without a server.
+  */
+class OtherSchemeFs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.hadoop.fs.DelegateToFileSystem(uri,
+      new org.apache.hadoop.fs.RawLocalFileSystem, conf, "other", false)
