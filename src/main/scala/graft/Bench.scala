@@ -6,6 +6,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
+      .config(GraftSession.codegenConf)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -19,7 +20,9 @@ object Bench {
     // InternalRow RDD: DataFrame.count() lets the optimizer drop pure
     // projections and times only the scan (the Probe found exactly
     // this; projection-heavy text queries were under-timed). Warmup
-    // uses the same path so the timed run compiles nothing.
+    // uses the same path so the timed run compiles nothing; that holds
+    // only while GraftSession.codegenConf's cache holds the whole
+    // registry's generated classes.
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         dir: String): Long =
       fn(spark, dir).queryExecution.toRdd.count()
@@ -31,21 +34,31 @@ object Bench {
     // 45.9s vs 87.9s total), and the minimum is the standard
     // noise-robust point estimate — every pass still does the full
     // work (toRdd count), nothing is skipped.
+    // A query that throws is failed, not fast: it gets no time, is
+    // left out of the total and named in "failed", and the run exits
+    // non-zero.
     val passes = (1 to 2).map { _ =>
       SparkEntry.queries.map { case (name, fn) =>
         val t0 = System.nanoTime()
-        try run(fn, sfDir) catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
+        val ok =
+          try { run(fn, sfDir); true }
+          catch { case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[bench] $name failed: $e")
+            false
+          }
+        name -> Option.when(ok)((System.nanoTime() - t0) / 1e9)
       }
     }
-    val results = SparkEntry.queries.keys.map { name =>
-      name -> passes.map(_(name)).min
-    }.toMap
+    val failed = SparkEntry.queries.keys
+      .filter(name => passes.exists(_(name).isEmpty)).toSeq.sorted
+    val results = SparkEntry.queries.keys.filterNot(failed.contains)
+      .map(name => name -> passes.map(_(name).get).min).toMap
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","runs":2,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","runs":2,"queries":$qs,"sf":"$sfDir","failed":$failedJson}"""
     println(line)
     // Self-contained round artifact: the full line above outgrew the
     // harness's 2000-char tail capture once the registry passed ~90
@@ -66,7 +79,8 @@ object Bench {
         true
       } catch { case scala.util.control.NonFatal(_) => false }
     val qf = if (wrote) s""""$outPath"""" else "null"
-    println(s"""{"metric":"total","value":$total,"unit":"sec","runs":2,"n_queries":${results.size},"sf":"$sfDir","queries_file":$qf}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","runs":2,"n_queries":${results.size},"sf":"$sfDir","queries_file":$qf,"failed":$failedJson}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -72,6 +72,7 @@ object ChaosCheck {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()
       .master("local-cluster[2,1,1024]")
+      .config(GraftSession.codegenConf)
       .appName("graft-chaos")
       .config("spark.sql.shuffle.partitions", "4")
       // ABSOLUTE paths: executors run with their cwd inside the

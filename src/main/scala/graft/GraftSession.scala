@@ -18,6 +18,23 @@ object GraftSession {
     GraftCheckpointFileManager.ConfKey ->
       classOf[GraftCheckpointFileManager].getName)
 
+  /** Spark's cache of compiled generated classes, sized to graft's
+    * working set. Spark compiles each generated class with Janino and
+    * keeps it in one JVM-wide cache, keyed by the generated source, of
+    * 100 classes by default. One pass of `pipeline_full` plus
+    * `sim_join_lsh` needs ~220 and a sweep of all 159 registry queries
+    * at sf0.01 needs 1,747, so at the default every warm pass
+    * recompiled what the pass before had evicted. 4000 holds the
+    * registry with room for a second scale's plans and user queries;
+    * the registry's classes cost ~13 MB of Metaspace.
+    *
+    * The size is fixed once per JVM, by the first session that
+    * compiles anything; later sessions cannot change it. A user who
+    * builds their own SparkSession sets this before any query runs.
+    */
+  val codegenConf: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> "4000")
+
   def builder(master: String = "local[*]",
       shufflePartitions: Int = Runtime.getRuntime.availableProcessors)
       : SparkSession.Builder =
@@ -33,6 +50,7 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config(checkpointConf)
+      .config(codegenConf)
       .withExtensions(new GraftExtensions)
 
   def local(): SparkSession = {

@@ -18,6 +18,7 @@ object PlanDump {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master(s"local[$cpus]")
+      .config(GraftSession.codegenConf)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()

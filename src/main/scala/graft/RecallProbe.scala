@@ -48,6 +48,7 @@ object RecallProbe {
     def wanted(m: String): Boolean = picked.isEmpty || picked(m)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
+      .config(GraftSession.codegenConf)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()

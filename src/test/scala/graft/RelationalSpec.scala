@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 object SparkTestSession {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
+    .config(GraftSession.codegenConf)
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
