@@ -81,7 +81,8 @@ object Probe {
       "wordcount_salted",
       "multimodal_decode",
       "ann_bruteforce", "ann_bruteforce_packed", "ann_lsh", "ann_ivf",
-      "ann_ivf_indexed", "ann_ivf_append", "ann_pq",
+      "ann_ivf_indexed", "ann_ivf_indexed_packed", "ann_ivf_append",
+      "ann_pq",
       // the exact knn_graph is the sim_join-style quadratic verifier
       // (maxRows-guarded) — only the IVF build probes at 100×
       "knn_graph_ivf",

@@ -623,6 +623,17 @@ object Similarity {
     * NO fit and NO assignment pass. Centroids are deterministic
     * (fitCentroids), so the indexed search is spec'd BIT-EQUAL to
     * the monolithic [[annIvf]] at the same parameters.
+    *
+    * One format: centroids are `(cell_id, c_emb array<double>)`, cell
+    * lists are `(vec_id, cell_id, emb_bin)` with each vector stored as
+    * its float32 blob (the S16 store). Every search scans the probed
+    * lists once per query batch, so the blob is decoded once per
+    * (candidate, probing query) pair by the fused single-load kernels,
+    * and it rides the cell_id equi-join shuffle at exactly 4·dim
+    * bytes. The packed kernels fold in the array kernels' element
+    * order ([[graft.functions.PackedVectorKernels]]), which is what
+    * keeps the search bit-equal to [[annIvf]]; PROBE_r20_packed_faces
+    * records the A/B that retired the earlier `array<float>` lists.
     */
   def saveIvfIndex(spark: SparkSession, sfDir: String, path: String,
       nCells: Int = 8, lloydIters: Int = 2): Unit =
@@ -637,9 +648,18 @@ object Similarity {
       nCells: Int = 8, lloydIters: Int = 2): Unit = {
     val centroids = fitCentroids(spark, emb, nCells, lloydIters)
     centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    assignCells(emb, centroids)
+    indexRows(emb, centroids)
       .write.mode("overwrite").parquet(s"$path/assigned")
   }
+
+  /** The persisted cell-list rows of `(vec_id, emb)` under
+    * `centroids`: the nearest-cell pass, each vector packed once.
+    */
+  private[graft] def indexRows(emb: DataFrame,
+      centroids: DataFrame): DataFrame =
+    assignCells(emb, centroids)
+      .select(col("vec_id"), col("cell_id"),
+        packFloats(col("emb")).as("emb_bin"))
 
   /** S13 — IVF INDEX MAINTENANCE: assign an increment's vectors to
     * the EXISTING centroids (one broadcast projection — no re-fit,
@@ -656,7 +676,7 @@ object Similarity {
   def appendIvfIndex(spark: SparkSession, newVecs: DataFrame,
       path: String): Unit = {
     val (centroids, _) = loadIvfIndex(spark, path)
-    assignCells(newVecs.select(col("vec_id"), col("emb")), centroids)
+    indexRows(newVecs.select(col("vec_id"), col("emb")), centroids)
       .write.mode("append").parquet(s"$path/assigned")
   }
 
@@ -672,7 +692,7 @@ object Similarity {
   def ivfDrift(spark: SparkSession, path: String): DataFrame = {
     val (centroids, assigned) = loadIvfIndex(spark, path)
     assigned.join(broadcast(centroids), Seq("cell_id"))
-      .withColumn("cos", cosineAny(col("emb"), col("c_emb")))
+      .withColumn("cos", cosinePackedAny(col("emb_bin"), col("c_emb")))
       .groupBy(col("cell_id"))
       .agg(count(lit(1)).as("n_vecs"), avg(col("cos")).as("mean_cos"))
       .orderBy(col("cell_id"))
@@ -702,7 +722,9 @@ object Similarity {
   }
 
   /** Load a persisted IVF index → (centroids, assigned); refuses
-    * tables without the index schema (the loadIndex convention).
+    * tables without the index schema (the loadIndex convention), and
+    * names an index written in the retired `array<float>` cell-list
+    * format so the caller rebuilds it rather than failing in a kernel.
     */
   def loadIvfIndex(spark: SparkSession,
       path: String): (DataFrame, DataFrame) = {
@@ -711,9 +733,14 @@ object Similarity {
     require(Seq("cell_id", "c_emb").forall(centroids.columns.contains),
       s"not an IVF centroid table at $path/centroids: " +
         centroids.columns.mkString("[", ",", "]"))
-    require(Seq("vec_id", "emb", "cell_id").forall(assigned.columns.contains),
+    val cols = assigned.columns
+    require(cols.contains("emb_bin") || !cols.contains("emb"),
+      s"array-format IVF index at $path/assigned (emb array<float>, " +
+        "no emb_bin): that format is no longer read — rebuild the " +
+        "index with saveIvfIndex")
+    require(Seq("vec_id", "cell_id", "emb_bin").forall(cols.contains),
       s"not an IVF assignment table at $path/assigned: " +
-        assigned.columns.mkString("[", ",", "]"))
+        cols.mkString("[", ",", "]"))
     (centroids, assigned)
   }
 
@@ -748,49 +775,60 @@ object Similarity {
         col("best.cell_id").as("cell_id"))
   }
 
-  /** Search a persisted/loaded IVF index: probe `nProbe` cells per
-    * query, rank within the probed lists — the [[annIvf]] tail with
+  /** Search a persisted/loaded IVF index with the corpus prefix
+    * `vec_id < nQueries` as the query table — the [[annIvf]] tail with
     * the fit and assignment stages gone.
     */
   def annIvfIndexed(centroids: DataFrame, assigned: DataFrame,
-      nProbe: Int = 2, k: Int = 5, nQueries: Int = 10): DataFrame = {
-    // r20: norms once per side + bounded-heap rank (same tie rule as
-    // the window it replaces — rows bit-equal, the annIvf shape)
+      nProbe: Int = 2, k: Int = 5, nQueries: Int = 10): DataFrame =
+    annIvfSearch(centroids, assigned,
+      assigned.filter(col("vec_id") < nQueries)
+        .select(col("vec_id").as("query_id"), col("emb_bin").as("q_bin")),
+      nProbe, k)
+
+  /** S18 — BATCHED IVF SERVING: search an index for an ARBITRARY query
+    * table `(query_id, q_bin)` — the realistic serving shape, where
+    * thousands-to-millions of queries amortize one pass over the
+    * probed cell lists. Plan: probe selection is one crossJoin against
+    * the broadcast centroids (nQ·nCells fused packed cosines), then ONE
+    * cell_id equi-join against the packed lists — un-hinted, so AQE
+    * broadcasts a small probe table and shuffles a corpus-sized one
+    * (the knnGraphIvf join shape; at full-corpus query volume this
+    * face IS the graph build) — and both rank stages are R26 bounded
+    * heaps, not windows: at nQ queries a window would shuffle-and-
+    * sort nQ·nProbe·E[cell] candidate rows, while the heaps move at
+    * most nProbe (resp. k) entries per query per partition,
+    * map-side combined. The heap's native (ord DESC, id ASC) order
+    * IS the library ANN tie rule, so on a corpus-prefix query table
+    * this face is BIT-EQUAL to the window-probed monolithic [[annIvf]]
+    * (spec-pinned). A query whose id matches a corpus vec_id excludes
+    * that vector (self-exclusion, the ann family rule); foreign ids
+    * exclude nothing.
+    */
+  def annIvfSearch(centroids: DataFrame, assigned: DataFrame,
+      queries: DataFrame, nProbe: Int = 2, k: Int = 5): DataFrame = {
     import graft.functions.AggFunctions.topk_by
-    val probes = assigned.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"),
-        normAny(col("emb")).as("q_nrm"))
-      .crossJoin(broadcast(centroids.select(col("cell_id"), col("c_emb"),
-        normAny(col("c_emb")).as("c_nrm"))))
-      .withColumn("cdist", dotAny(col("q_emb"), col("c_emb")) /
-        (col("q_nrm") * col("c_nrm")))
-      .withColumn("crnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cdist").desc, col("cell_id"))))
-      .filter(col("crnk") <= nProbe)
-      .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cell_id"))
-    assigned.select(col("vec_id"), col("cell_id"), col("emb"),
-        normAny(col("emb")).as("nrm"))
-      .join(probes, Seq("cell_id"))
+    val probes = queries.select(col("query_id"), col("q_bin"))
+      .crossJoin(broadcast(centroids))
+      .withColumn("cdist", cosinePackedAny(col("q_bin"), col("c_emb")))
+      .groupBy(col("query_id"))
+      .agg(topk_by(col("cdist"), col("cell_id"), nProbe).as("pc"),
+        first(col("q_bin")).as("q_bin"))
+      .select(col("query_id"), col("q_bin"), explode(col("pc")).as("p"))
+      .select(col("query_id"), col("q_bin"), col("p.id").as("cell_id"))
+    assigned.join(probes, Seq("cell_id"))
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", dotAny(col("emb"), col("q_emb")) /
-        (col("nrm") * col("q_nrm")))
+      .withColumn("cosine", cosinePacked(col("emb_bin"), col("q_bin")))
       .groupBy(col("query_id"))
       .agg(topk_by(col("cosine"), col("vec_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "nb")))
+      .select(col("query_id"),
+        posexplode(col("top")).as(Seq("pos", "nb")))
       .select(col("query_id"), col("nb.id").as("neighbor_id"),
         col("nb.ord").as("cosine"),
         (col("pos") + 1).cast("int").as("rnk"))
       .orderBy(col("query_id"), col("rnk"))
   }
 
-  /** Content fingerprint of the embeddings source: md5 over every
-    * file's (relative path, length, mtime) under the parquet
-    * path, in sorted order. Keys the /tmp index cache so a
-    * REGENERATED corpus at the same path gets a fresh index instead
-    * of silently serving the stale one (data files rewritten ⇒ new
-    * mtimes/sizes ⇒ new key).
-    */
   /** Scratch dirs whose lifetime is the JVM (lazily-read append
     * indexes): one shutdown hook reaps them all.
     */
@@ -811,6 +849,13 @@ object Similarity {
     reapDirs.add(dir): Unit
   }
 
+  /** Content fingerprint of the embeddings source: md5 over every
+    * file's (relative path, length, mtime) under the parquet
+    * path, in sorted order. Keys the /tmp index cache so a
+    * REGENERATED corpus at the same path gets a fresh index instead
+    * of silently serving the stale one (data files rewritten ⇒ new
+    * mtimes/sizes ⇒ new key).
+    */
   private[operators] def sourceFingerprint(path: String): String = {
     // listFiles() is null on permission errors or a dir removed
     // mid-walk — treat as empty rather than NPE.
@@ -828,16 +873,7 @@ object Similarity {
     md.digest().take(8).map("%02x".format(_)).mkString
   }
 
-  /** Registered `ann_ivf_indexed`: index persisted once per input
-    * dir (the realMediaTable cache convention — production reads an
-    * index that already exists), searched from the loaded artifact.
-    * The cache key includes a CONTENT fingerprint of the embeddings
-    * parquet (sizes + mtimes), so regenerating the corpus under the
-    * same path invalidates the cached index; the build lands in a
-    * temp dir and is renamed into place atomically, so a concurrent
-    * process either sees the complete index or builds its own.
-    */
-  /** The cell count the CACHED serving indexes are built with: the
+  /** The cell count the CACHED serving index is built with: the
     * knnGraphIvf auto rule (`max(8, ceil(n / 1024))`, capped). A
     * FIXED count would let E[cell] — and with it every search's
     * candidate volume — grow linearly with the corpus: the r20 probe
@@ -884,8 +920,21 @@ object Similarity {
       .getOrElse(autoCells(embeddings(spark, sfDir).count()))
   }
 
-  def annIvfIndexedQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = new java.io.File("/tmp/graft_ivf_cache")
+  /** The serving index every registered cached IVF face searches:
+    * persisted once per input dir (the realMediaTable cache convention
+    * — production reads an index that already exists) and loaded from
+    * the artifact. The cache key includes a CONTENT fingerprint of the
+    * embeddings parquet (sizes + mtimes), so regenerating the corpus
+    * under the same path invalidates the cached index; the build lands
+    * in a temp dir and is renamed into place atomically, so a
+    * concurrent process either sees the complete index or builds its
+    * own. The root is the one the packed cell-list format has always
+    * used, so a cache dir holding the retired array format is never
+    * read.
+    */
+  private def indexFor(spark: SparkSession,
+      sfDir: String): (DataFrame, DataFrame) = {
+    val root = new java.io.File("/tmp/graft_ivfpk_cache")
     val fp = sourceFingerprint(s"$sfDir/embeddings.parquet")
     val cells = cellsFor(spark, sfDir, root, fp)
     val cache = ArtifactCache.ensure(
@@ -894,200 +943,31 @@ object Similarity {
       s"c$cells-" + fp,
       c => new java.io.File(c, "assigned/_SUCCESS").exists())(
       tmp => saveIvfIndex(spark, sfDir, tmp.toString, nCells = cells))
-    val (centroids, assigned) = loadIvfIndex(spark, cache.toString)
+    loadIvfIndex(spark, cache.toString)
+  }
+
+  /** Registered `ann_ivf_indexed` and `ann_ivf_indexed_packed` (two
+    * keys, one index): the cached index searched with the corpus
+    * prefix as queries. Rows-only (float cosine ranks, the ann family
+    * reasoning); SimilaritySpec pins it bit-equal to [[annIvf]].
+    */
+  def annIvfIndexedQuery(spark: SparkSession, sfDir: String): DataFrame = {
+    val (centroids, assigned) = indexFor(spark, sfDir)
     annIvfIndexed(centroids, assigned)
   }
 
-  /** S12×S16 — the PACKED persisted IVF index: same deterministic
-    * centroids, cell lists stored as `(vec_id, cell_id, emb_bin)`
-    * float32 blobs instead of `array<float>` (the r19 verdict's #1 —
-    * the S16 store wired into the production serving artifact). Why
-    * this is the shape the serving path wants: every search scans
-    * the probed cell lists once per query batch, so the list
-    * elements are decoded once per (candidate, probing query) PAIR —
-    * the reuse-per-row face where PROBE_r20_packed_AB measured the
-    * fused single-load kernels winning at every dim — and the blob
-    * rides the cell_id equi-join shuffle at exactly 4·dim bytes with
-    * no per-element offsets. Searches are spec'd BIT-EQUAL to the
-    * array-face [[annIvfIndexed]] over the same fit
-    * ([[graft.functions.PackedVectorKernels]] widens floats to
-    * double in the same fold order as the array kernels).
-    */
-  def saveIvfIndexPackedOf(spark: SparkSession, emb: DataFrame,
-      path: String, nCells: Int = 8, lloydIters: Int = 2): Unit = {
-    val centroids = fitCentroids(spark, emb, nCells, lloydIters)
-    centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    assignCells(emb, centroids)
-      .select(col("vec_id"), col("cell_id"),
-        packFloats(col("emb")).as("emb_bin"))
-      .write.mode("overwrite").parquet(s"$path/assigned")
-  }
-
-  /** [[saveIvfIndexPackedOf]] over a harness corpus dir. */
-  def saveIvfIndexPacked(spark: SparkSession, sfDir: String,
-      path: String, nCells: Int = 8, lloydIters: Int = 2): Unit =
-    saveIvfIndexPackedOf(spark, embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding").as("emb")),
-      path, nCells, lloydIters)
-
-  /** Load a packed IVF index; refuses foreign tables and ARRAY-face
-    * indexes by name (the loadIvfIndex convention — the two formats
-    * are deliberately not interchangeable at load, so a path mix-up
-    * fails at the artifact boundary, not in a kernel).
-    */
-  def loadIvfIndexPacked(spark: SparkSession,
-      path: String): (DataFrame, DataFrame) = {
-    val centroids = spark.read.parquet(s"$path/centroids")
-    val assigned = spark.read.parquet(s"$path/assigned")
-    require(Seq("cell_id", "c_emb").forall(centroids.columns.contains),
-      s"not an IVF centroid table at $path/centroids: " +
-        centroids.columns.mkString("[", ",", "]"))
-    require(
-      Seq("vec_id", "emb_bin", "cell_id").forall(assigned.columns.contains),
-      s"not a PACKED IVF assignment table at $path/assigned " +
-        "(array-face indexes load via loadIvfIndex): " +
-        assigned.columns.mkString("[", ",", "]"))
-    (centroids, assigned)
-  }
-
-  /** S13×S16 — append an increment to a packed index: assign against
-    * the frozen centroids, pack, append — per-row semantics, so
-    * append ≡ rebuilding the packed assignment of the unioned corpus
-    * under the SAME centroids (spec'd, the [[appendIvfIndex]]
-    * contract).
-    */
-  def appendIvfIndexPacked(spark: SparkSession, newVecs: DataFrame,
-      path: String): Unit = {
-    val (centroids, _) = loadIvfIndexPacked(spark, path)
-    assignCells(newVecs.select(col("vec_id"), col("emb")), centroids)
-      .select(col("vec_id"), col("cell_id"),
-        packFloats(col("emb")).as("emb_bin"))
-      .write.mode("append").parquet(s"$path/assigned")
-  }
-
-  /** Search a packed IVF index: the [[annIvfIndexed]] plan with the
-    * fused packed kernels — probe selection scores the query blob
-    * against the double[] centroids ([[CosinePackedAny]], one pass),
-    * candidate scoring is blob×blob ([[CosinePacked]]), and the
-    * corpus side shuffles 4·dim-byte blobs through the cell_id
-    * equi-join. Output bit-equal to the array face over the same fit
-    * (SimilaritySpec pin).
-    */
-  def annIvfIndexedPacked(centroids: DataFrame, assigned: DataFrame,
-      nProbe: Int = 2, k: Int = 5, nQueries: Int = 10): DataFrame = {
-    val probes = assigned.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("emb_bin").as("q_bin"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("cdist", cosinePackedAny(col("q_bin"), col("c_emb")))
-      .withColumn("crnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cdist").desc, col("cell_id"))))
-      .filter(col("crnk") <= nProbe)
-      .select(col("query_id"), col("q_bin"), col("cell_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    assigned.join(probes, Seq("cell_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", cosinePacked(col("emb_bin"), col("q_bin")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("cosine"), col("rnk"))
-      .orderBy(col("query_id"), col("rnk"))
-  }
-
-  /** S18 — BATCHED PACKED IVF SERVING: [[annIvfIndexedPacked]] for an
-    * ARBITRARY query table `(query_id, q_bin)` instead of a corpus
-    * prefix — the realistic serving shape, where thousands-to-
-    * millions of queries amortize one pass over the probed cell
-    * lists. Plan: probe selection is one crossJoin against the
-    * broadcast centroids (nQ·nCells fused packed cosines), then ONE
-    * cell_id equi-join against the packed lists — un-hinted, so AQE
-    * broadcasts a small probe table and shuffles a corpus-sized one
-    * (the knnGraphIvf join shape; at full-corpus query volume this
-    * face IS the graph build) — and both rank stages are R26 bounded
-    * heaps, not windows: at nQ queries a window would shuffle-and-
-    * sort nQ·nProbe·E[cell] candidate rows, while the heaps move at
-    * most nProbe (resp. k) entries per query per partition,
-    * map-side combined. The heap's native (ord DESC, id ASC) order
-    * IS the library ANN tie rule, so on a corpus-prefix query table
-    * this face is BIT-EQUAL to the window-ranked
-    * [[annIvfIndexedPacked]] (spec-pinned — which also re-pins
-    * heap ≡ window on the served shape). A query whose id matches a
-    * corpus vec_id excludes that vector (self-exclusion, the ann
-    * family rule); foreign ids exclude nothing.
-    */
-  def annIvfSearchPacked(centroids: DataFrame, assigned: DataFrame,
-      queries: DataFrame, nProbe: Int = 2, k: Int = 5): DataFrame = {
-    import graft.functions.AggFunctions.topk_by
-    val probes = queries.select(col("query_id"), col("q_bin"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("cdist", cosinePackedAny(col("q_bin"), col("c_emb")))
-      .groupBy(col("query_id"))
-      .agg(topk_by(col("cdist"), col("cell_id"), nProbe).as("pc"),
-        first(col("q_bin")).as("q_bin"))
-      .select(col("query_id"), col("q_bin"), explode(col("pc")).as("p"))
-      .select(col("query_id"), col("q_bin"), col("p.id").as("cell_id"))
-    assigned.join(probes, Seq("cell_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", cosinePacked(col("emb_bin"), col("q_bin")))
-      .groupBy(col("query_id"))
-      .agg(topk_by(col("cosine"), col("vec_id"), k).as("top"))
-      .select(col("query_id"),
-        posexplode(col("top")).as(Seq("pos", "nb")))
-      .select(col("query_id"), col("nb.id").as("neighbor_id"),
-        col("nb.ord").as("cosine"),
-        (col("pos") + 1).cast("int").as("rnk"))
-      .orderBy(col("query_id"), col("rnk"))
-  }
-
   /** Registered `ann_ivf_search_packed`: the S18 batch face over the
-    * cached packed index — every fifth corpus vector (vec_id % 5 ==
-    * 2) as the query batch, so the row exercises a query table an
-    * order of magnitude past the prefix faces' nQueries=10.
-    * Rows-only (float cosine ranks); SimilaritySpec pins the face
-    * bit-equal to [[annIvfIndexedPacked]] on a prefix query table.
+    * cached index — every fifth corpus vector (vec_id % 5 == 2) as the
+    * query batch, so the row exercises a query table an order of
+    * magnitude past the prefix face's nQueries=10. Rows-only (float
+    * cosine ranks).
     */
-  def annIvfSearchPackedQuery(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val (centroids, assigned) = packedIndexFor(spark, sfDir)
-    annIvfSearchPacked(centroids, assigned,
+  def annIvfSearchQuery(spark: SparkSession, sfDir: String): DataFrame = {
+    val (centroids, assigned) = indexFor(spark, sfDir)
+    annIvfSearch(centroids, assigned,
       assigned.filter(col("vec_id") % 5 === 2)
         .select(col("vec_id").as("query_id"),
           col("emb_bin").as("q_bin")))
-  }
-
-  /** Registered `ann_ivf_indexed_packed`: the packed index persisted
-    * once per input dir (the annIvfIndexedQuery cache convention,
-    * its own root — the two formats never share a cache dir),
-    * searched from the loaded artifact. Rows-only (float cosine
-    * ranks, the ann family reasoning); SimilaritySpec pins the
-    * output bit-equal to ann_ivf_indexed over the same fit.
-    */
-  def annIvfIndexedPackedQuery(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val (centroids, assigned) = packedIndexFor(spark, sfDir)
-    annIvfIndexedPacked(centroids, assigned)
-  }
-
-  /** The cached packed index both packed registered faces search —
-    * same [[autoCells]] geometry as the array cache, so the
-    * cross-format bit-equality pin holds at every scale.
-    */
-  private def packedIndexFor(spark: SparkSession,
-      sfDir: String): (DataFrame, DataFrame) = {
-    val root = new java.io.File("/tmp/graft_ivfpk_cache")
-    val fp = sourceFingerprint(s"$sfDir/embeddings.parquet")
-    // warm path skips the count() job — see [[cellsFor]]
-    val cells = cellsFor(spark, sfDir, root, fp)
-    val cache = ArtifactCache.ensure(
-      root,
-      new java.io.File(sfDir).getName,
-      s"c$cells-" + fp,
-      c => new java.io.File(c, "assigned/_SUCCESS").exists())(
-      tmp => saveIvfIndexPacked(spark, sfDir, tmp.toString,
-        nCells = cells))
-    loadIvfIndexPacked(spark, cache.toString)
   }
 
   /** Bounded centroid export for the stream-side probe step (the
@@ -1532,10 +1412,8 @@ object Similarity {
     */
   def knnGraphIvf(spark: SparkSession, sfDir: String,
       k: Int = 5, nCells: Int = 0, nProbe: Int = 2,
-      lloydIters: Int = 2, targetCell: Int = 1024,
-      packed: Boolean = true): DataFrame = {
+      lloydIters: Int = 2, targetCell: Int = 1024): DataFrame = {
     require(targetCell > 0, s"targetCell must be > 0: $targetCell")
-    import graft.functions.AggFunctions.topk_by
     val emb = embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").as("emb"))
     val cells =
@@ -1546,52 +1424,22 @@ object Similarity {
           1 << 20).toInt
       }
     val centroids = fitCentroids(spark, emb, cells, lloydIters)
-    // `packed` (the r20 default — the S16 store on the graph build's
-    // hot path): the assignment pass packs each vector into its
-    // float32 blob ONCE, so the checkpointed blocks, the
-    // vector-vs-centroid probe pass and the corpus-sized cell_id
-    // equi-join all carry the 4·dim-byte blob and the candidate
-    // scoring runs the fused one-pass kernels. Bit-equal to the
-    // array face (packed=false, kept as the differential pin's
-    // reference): pack is bit-preserving and every packed kernel
-    // folds in the array kernels' element order.
-    val vecCol = if (packed) packFloats(col("emb")) else col("emb")
-    val assigned = assignCells(emb, centroids)
-      .select(col("vec_id"), col("cell_id"), vecCol.as("v"))
+    // the assignment pass packs each vector into its float32 blob
+    // ONCE (the S16 store on the graph build's hot path), so the
+    // checkpointed blocks, the vector-vs-centroid probe pass and the
+    // corpus-sized cell_id equi-join all carry the 4·dim-byte blob and
+    // the candidate scoring runs the fused one-pass kernels — bit-equal
+    // to the array kernels, whose element order they fold in.
+    val assigned = indexRows(emb, centroids)
       // one assignment pass feeds both sides (executor-local blocks —
       // see the Pipeline fault-tolerance contract, SURVEY §5)
       .transform(graft.plans.Lineage.truncate(_))
-    def cos(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      if (packed) cosinePacked(a, b) else cosineAny(a, b)
-    def cosC(v: org.apache.spark.sql.Column, c: org.apache.spark.sql.Column) =
-      if (packed) cosinePackedAny(v, c) else cosineAny(v, c)
-    // both rank stages are R26 bounded heaps, NOT windows: a window
-    // would shuffle-and-sort every (vector, centroid) and every
-    // (vector, candidate) row — #vectors·nProbe·E[cell] rows at
-    // corpus scale — while the heaps move at most nProbe (resp. k)
-    // entries per vector per partition, map-side combined. The heap's
-    // native order (ord DESC, id ASC) IS the library ANN tie rule.
-    val probes = assigned
-      .select(col("vec_id").as("query_id"), col("v").as("q_v"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("cdist", cosC(col("q_v"), col("c_emb")))
-      .groupBy(col("query_id"))
-      .agg(topk_by(col("cdist"), col("cell_id"), nProbe).as("pc"),
-        first(col("q_v")).as("q_v"))
-      .select(col("query_id"), col("q_v"),
-        explode(col("pc")).as("p"))
-      .select(col("query_id"), col("q_v"),
-        col("p.id").as("cell_id"))
-    assigned.join(probes, Seq("cell_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", cos(col("v"), col("q_v")))
-      .groupBy(col("query_id"))
-      .agg(topk_by(col("cosine"), col("vec_id"), k).as("top"))
-      .select(col("query_id").as("vec_id"),
-        posexplode(col("top")).as(Seq("pos", "nb")))
-      .select(col("vec_id"), col("nb.id").as("neighbor_id"),
-        col("nb.ord").as("cosine"),
-        (col("pos") + 1).cast("int").as("rnk"))
-      .orderBy(col("vec_id"), col("rnk"))
+    // every vector is a query: the S18 batch search over the corpus
+    // itself (bounded-heap ranks, self-excluded by id)
+    annIvfSearch(centroids, assigned,
+      assigned.select(col("vec_id").as("query_id"),
+        col("emb_bin").as("q_bin")),
+      nProbe, k)
+      .withColumnRenamed("query_id", "vec_id")
   }
 }

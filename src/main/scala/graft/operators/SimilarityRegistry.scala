@@ -44,21 +44,20 @@ object SimilarityRegistry {
     "sim_join_lsh_at" -> ((s, d) => Similarity.simJoinLshAt(s, d)),
     "ann_lsh" -> ((s, d) => Similarity.annLsh(s, d)),
     "ann_ivf" -> ((s, d) => Similarity.annIvf(s, d)),
-    // rows-only like ann_ivf (float cosine ranks); SimilaritySpec
-    // pins the indexed search BIT-equal to the monolithic annIvf
-    // under one deterministic fit
+    // ann_ivf_indexed and ann_ivf_indexed_packed: two keys, ONE
+    // persisted index (the cached packed cell lists) searched with the
+    // corpus prefix as queries. Rows-only like ann_ivf (float cosine
+    // ranks); SimilaritySpec pins both bit-equal to the monolithic
+    // annIvf under one deterministic fit
     "ann_ivf_indexed" -> ((s, d) => Similarity.annIvfIndexedQuery(s, d)),
-    // S12×S16: the packed persisted index (cell lists as float32
-    // blobs) searched with the fused kernels. Rows-only (float cosine
-    // ranks); SimilaritySpec pins the output bit-equal to
-    // ann_ivf_indexed over the same deterministic fit
     "ann_ivf_indexed_packed" -> ((s, d) =>
-      Similarity.annIvfIndexedPackedQuery(s, d)),
-    // S18 batch serving face: arbitrary (query_id, q_bin) table,
-    // bounded-heap ranking. Rows-only; SimilaritySpec pins it
-    // bit-equal to annIvfIndexedPacked on a prefix query table
+      Similarity.annIvfIndexedQuery(s, d)),
+    // S18 batch serving face over the same cached index: 1-in-5 of the
+    // corpus as an arbitrary (query_id, q_bin) table, bounded-heap
+    // ranking. Rows-only; SimilaritySpec pins annIvfSearch bit-equal
+    // to annIvf on a prefix query table
     "ann_ivf_search_packed" -> ((s, d) =>
-      Similarity.annIvfSearchPackedQuery(s, d)),
+      Similarity.annIvfSearchQuery(s, d)),
     // rows-only: the S13 maintenance loop (fit 4/5, append 1/5 under
     // frozen centroids, search); SimilaritySpec pins append ≡
     // rebuild-under-fixed-centroids bit-exactly

@@ -934,18 +934,56 @@ object StreamingOps {
   /** X17 — STREAMING ANN SCREEN against the persisted IVF index
     * (S12): each arriving vector probes its `nProbe` nearest
     * centroids (the BOUNDED centroid export rides in the closure —
-    * the nbModel convention; the corpus-sized assignment lists stay
-    * a distributed table, stream-static joined) and emits every
-    * indexed vector in the probed cells with cosine ≥ `minCosine`.
-    * Threshold search, not top-k: per-query ranking would need a
-    * stateful aggregate; the retrieval contract at ingest is "give
-    * me everything similar enough", and a consumer ranks. Stateless
-    * end to end — the probe fan-out is a typed flatMap (no
-    * watermark needed, nothing stateful downstream), candidate
-    * scoring is the codegen'd cosine kernel after the cell join.
-    * Probe selection uses the same (cosine DESC, cell_id ASC) order
-    * as [[graft.operators.Similarity.annIvfIndexed]].
+    * the nbModel convention; the corpus-sized cell lists
+    * `(vec_id, cell_id, emb_bin)` stay a distributed table,
+    * stream-static joined) and emits every indexed vector in the
+    * probed cells with cosine ≥ `minCosine`. Threshold search, not
+    * top-k: per-query ranking is [[streamingAnnTopK]]; the retrieval
+    * contract at ingest is "give me everything similar enough", and a
+    * consumer ranks. Stateless end to end — the probe fan-out is a
+    * typed flatMap (no watermark needed, nothing stateful downstream)
+    * that packs the query vector ONCE per arrival, and candidate
+    * scoring is the fused blob×blob kernel after the cell join, so
+    * the join ships 4·dim-byte blobs. Probe selection uses the same
+    * (cosine DESC, cell_id ASC) order as
+    * [[graft.operators.Similarity.annIvfSearch]].
     */
+  def streamingAnnScreen(queries: Dataset[StreamVec],
+      centroidsExport: Array[(Long, Array[Double])], assigned: DataFrame,
+      nProbe: Int = 2, minCosine: Double = 0.8): DataFrame = {
+    require(centroidsExport.nonEmpty, "empty centroid export")
+    require(nProbe >= 1 && nProbe <= centroidsExport.length,
+      s"nProbe $nProbe out of range for ${centroidsExport.length} cells")
+    import queries.sparkSession.implicits._
+    import graft.functions.VectorFunctions._
+    val banded = queries.flatMap { q =>
+      // cosine vs each exported centroid, fixed accumulation order
+      val scored = centroidsExport.map { case (cellId, c) =>
+        var dot = 0.0; var na = 0.0; var nb = 0.0
+        var i = 0
+        val n = math.min(q.emb.length, c.length)
+        while (i < n) {
+          val a = q.emb(i).toDouble; val b = c(i)
+          dot += a * b; na += a * a; nb += b * b
+          i += 1
+        }
+        val cos =
+          if (na == 0.0 || nb == 0.0) 0.0
+          else dot / (math.sqrt(na) * math.sqrt(nb))
+        (cellId, cos)
+      }
+      val qBin = graft.functions.PackedVectorKernels.packArray(q.emb)
+      scored.sortBy { case (cellId, cos) => (-cos, cellId) }
+        .take(nProbe)
+        .map { case (cellId, _) => (q.query_id, q.ts, qBin, cellId) }
+    }.toDF("query_id", "ts", "q_bin", "cell_id")
+    banded.join(assigned, Seq("cell_id"))
+      .filter(col("vec_id") =!= col("query_id"))
+      .withColumn("cosine", cosinePacked(col("emb_bin"), col("q_bin")))
+      .filter(col("cosine") >= minCosine)
+      .select(col("query_id"), col("ts"), col("vec_id"), col("cosine"))
+  }
+
   case class AnnTopKState(tsMs: Long, items: List[(Long, Double)])
   case class AnnTopKOut(query_id: Long, ts: Timestamp,
       neighbor_id: Long, cosine: Double, rnk: Int)
@@ -968,47 +1006,18 @@ object StreamingOps {
     * event-time tag; the ts VALUES pass through untouched).
     *
     * Ranking order is (cosine DESC, vec_id ASC) — identical to
-    * [[graft.operators.Similarity.annIvfIndexed]]; StreamingSpec
+    * [[graft.operators.Similarity.annIvfSearch]]; StreamingSpec
     * pins the streamed top-k bit-equal to the batch search under one
     * persisted index.
     */
   def streamingAnnTopK(queries: Dataset[StreamVec],
       centroidsExport: Array[(Long, Array[Double])], assigned: DataFrame,
       nProbe: Int = 2, k: Int = 5,
-      watermark: String = "10 minutes"): Dataset[AnnTopKOut] =
-    annTopKTail(streamingAnnScreen(queries, centroidsExport, assigned,
-      nProbe, minCosine = -2.0), k, watermark)
-
-  /** X18×S16 — [[streamingAnnTopK]] over a PACKED index (the S12×S16
-    * assignment table `(vec_id, cell_id, emb_bin)`): the same probe
-    * selection and the same bounded-heap state machine, with the
-    * candidate scoring on the fused blob kernels and the stream-
-    * static join carrying 4·dim-byte blobs. Bit-equal to the array
-    * face under one fit (the packed kernels fold in the array
-    * kernels' element order — StreamingSpec pins stream ≡ batch
-    * [[graft.operators.Similarity.annIvfIndexedPacked]], which is
-    * itself pinned ≡ the array search).
-    */
-  def streamingAnnTopKPacked(queries: Dataset[StreamVec],
-      centroidsExport: Array[(Long, Array[Double])],
-      assignedPacked: DataFrame, nProbe: Int = 2, k: Int = 5,
-      watermark: String = "10 minutes"): Dataset[AnnTopKOut] =
-    annTopKTail(streamingAnnScreenPacked(queries, centroidsExport,
-      assignedPacked, nProbe, minCosine = -2.0), k, watermark)
-
-  /** The shared X18 stateful tail: per-query bounded heap
-    * (`flatMapGroupsWithState`, state ≤ k pairs + one timestamp per
-    * in-flight query), event-time timeout emits the final ranking
-    * and evicts. The watermark is re-stated on the candidate stream
-    * because the probe fan-out is a typed flatMap (the X8 lesson:
-    * typed ops strip the event-time tag; the ts VALUES pass through
-    * untouched).
-    */
-  private def annTopKTail(candidates: DataFrame, k: Int,
-      watermark: String): Dataset[AnnTopKOut] = {
+      watermark: String = "10 minutes"): Dataset[AnnTopKOut] = {
     require(k >= 1, s"k must be >= 1: $k")
-    import candidates.sparkSession.implicits._
-    val cand = candidates
+    import queries.sparkSession.implicits._
+    val cand = streamingAnnScreen(queries, centroidsExport, assigned,
+        nProbe, minCosine = -2.0)
       .withWatermark("ts", watermark)
       .as[(Long, Timestamp, Long, Double)]
 
@@ -1041,87 +1050,6 @@ object StreamingOps {
     cand.groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(update)
-  }
-
-  def streamingAnnScreen(queries: Dataset[StreamVec],
-      centroidsExport: Array[(Long, Array[Double])], assigned: DataFrame,
-      nProbe: Int = 2, minCosine: Double = 0.8): DataFrame = {
-    require(centroidsExport.nonEmpty, "empty centroid export")
-    require(nProbe >= 1 && nProbe <= centroidsExport.length,
-      s"nProbe $nProbe out of range for ${centroidsExport.length} cells")
-    import queries.sparkSession.implicits._
-    import graft.functions.VectorFunctions._
-    val banded = queries.flatMap { q =>
-      // cosine vs each exported centroid, fixed accumulation order
-      val scored = centroidsExport.map { case (cellId, c) =>
-        var dot = 0.0; var na = 0.0; var nb = 0.0
-        var i = 0
-        val n = math.min(q.emb.length, c.length)
-        while (i < n) {
-          val a = q.emb(i).toDouble; val b = c(i)
-          dot += a * b; na += a * a; nb += b * b
-          i += 1
-        }
-        val cos =
-          if (na == 0.0 || nb == 0.0) 0.0
-          else dot / (math.sqrt(na) * math.sqrt(nb))
-        (cellId, cos)
-      }
-      scored.sortBy { case (cellId, cos) => (-cos, cellId) }
-        .take(nProbe)
-        .map { case (cellId, _) => (q.query_id, q.ts, q.emb, cellId) }
-    }.toDF("query_id", "ts", "q_emb", "cell_id")
-    banded.join(assigned, Seq("cell_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", cosineAny(col("emb"), col("q_emb")))
-      .filter(col("cosine") >= minCosine)
-      .select(col("query_id"), col("ts"), col("vec_id"), col("cosine"))
-  }
-
-  /** X17×S16 — [[streamingAnnScreen]] over a PACKED assignment table
-    * `(vec_id, cell_id, emb_bin)`: identical probe selection (the
-    * driver-exported centroids ride the closure as double[] — same
-    * fixed-order fold, so the probed cells are identical), the query
-    * vector packs ONCE per arrival inside the typed flatMap, and
-    * candidate scoring is the fused blob×blob kernel after the cell
-    * join — the stream-static join ships 4·dim-byte blobs. Cosines
-    * bit-equal to the array face (the packed kernel contract).
-    */
-  def streamingAnnScreenPacked(queries: Dataset[StreamVec],
-      centroidsExport: Array[(Long, Array[Double])],
-      assignedPacked: DataFrame, nProbe: Int = 2,
-      minCosine: Double = 0.8): DataFrame = {
-    require(centroidsExport.nonEmpty, "empty centroid export")
-    require(nProbe >= 1 && nProbe <= centroidsExport.length,
-      s"nProbe $nProbe out of range for ${centroidsExport.length} cells")
-    import queries.sparkSession.implicits._
-    import graft.functions.VectorFunctions._
-    val banded = queries.flatMap { q =>
-      val scored = centroidsExport.map { case (cellId, c) =>
-        var dot = 0.0; var na = 0.0; var nb = 0.0
-        var i = 0
-        val n = math.min(q.emb.length, c.length)
-        while (i < n) {
-          val a = q.emb(i).toDouble; val b = c(i)
-          dot += a * b; na += a * a; nb += b * b
-          i += 1
-        }
-        val cos =
-          if (na == 0.0 || nb == 0.0) 0.0
-          else dot / (math.sqrt(na) * math.sqrt(nb))
-        (cellId, cos)
-      }
-      // one pack per arrival; every probe row shares the blob
-      val qBin = graft.functions.PackedVectorKernels.packArray(q.emb)
-      scored.sortBy { case (cellId, cos) => (-cos, cellId) }
-        .take(nProbe)
-        .map { case (cellId, _) => (q.query_id, q.ts, qBin, cellId) }
-    }.toDF("query_id", "ts", "q_bin", "cell_id")
-    banded.join(assignedPacked, Seq("cell_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", cosinePacked(col("emb_bin"), col("q_bin")))
-      .filter(col("cosine") >= minCosine)
-      .select(col("query_id"), col("ts"), col("vec_id"), col("cosine"))
   }
 
   case class StreamUrlDoc(doc_id: Long, ts: Timestamp, url: String)

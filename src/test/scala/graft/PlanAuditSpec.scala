@@ -831,13 +831,15 @@ class PlanAuditSpec extends AnyFunSuite {
       StreamingOps.streamingIncrementalScreenVerified(
         docStream(sampleText).toDS(), incIx, oldDocs))
 
-    // X17/X18 ANN faces over one persisted IVF index, both formats
+    // X17/X18 ANN faces over one persisted IVF index
     val ivfDir = java.nio.file.Files
       .createTempDirectory("graft_lint_ivf").toString
     Similarity.saveIvfIndex(spark, sf, ivfDir)
     val (centroids, assigned) = Similarity.loadIvfIndex(spark, ivfDir)
     val export = Similarity.ivfCentroidsExport(centroids)
-    val qEmb = assigned.select(col("emb")).limit(1).collect()
+    val qEmb = assigned
+      .select(graft.functions.VectorFunctions.unpackFloats(col("emb_bin")))
+      .limit(1).collect()
       .head.getSeq[Float](0).toArray
     def vecStream(): MemoryStream[StreamVec] = {
       val in = MemoryStream[StreamVec]
@@ -848,16 +850,6 @@ class PlanAuditSpec extends AnyFunSuite {
       vecStream().toDS(), export, assigned))
     run("X18 streamingAnnTopK")(StreamingOps.streamingAnnTopK(
       vecStream().toDS(), export, assigned))
-    val pkDir = java.nio.file.Files
-      .createTempDirectory("graft_lint_ivfpk").toString
-    Similarity.saveIvfIndexPacked(spark, sf, pkDir)
-    val (cPk, aPk) = Similarity.loadIvfIndexPacked(spark, pkDir)
-    run("X17p streamingAnnScreenPacked")(
-      StreamingOps.streamingAnnScreenPacked(vecStream().toDS(),
-        Similarity.ivfCentroidsExport(cPk), aPk))
-    run("X18p streamingAnnTopKPacked")(
-      StreamingOps.streamingAnnTopKPacked(vecStream().toDS(),
-        Similarity.ivfCentroidsExport(cPk), aPk))
 
     // X23 URL gate + per-domain cap; X27 composed admission
     val (docsFx, blocklist) = Pipeline.releaseFixture(spark, sf)

@@ -369,25 +369,29 @@ class SimilaritySpec extends AnyFunSuite {
       s"mean cosine distortion ${diffs.sum / diffs.size} too high")
   }
 
+  // (query_id, neighbor_id, cosine bits, rnk): bit-level row identity
+  private def bitRows(df: org.apache.spark.sql.DataFrame) = df.collect()
+    .map(r => (r.getLong(0), r.getLong(1),
+      java.lang.Double.doubleToLongBits(r.getDouble(2)), r.getInt(3))).toSeq
+
   test("persisted IVF index answers bit-equal to the monolithic annIvf") {
+    val S = graft.operators.Similarity
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ivf_idx").toString
-    graft.operators.Similarity.saveIvfIndex(spark, sf, dir)
-    val (centroids, assigned) =
-      graft.operators.Similarity.loadIvfIndex(spark, dir)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-        r.getInt(3))).toSeq
-    val indexed = rows(graft.operators.Similarity
-      .annIvfIndexed(centroids, assigned))
-    val direct = rows(graft.operators.Similarity.annIvf(spark, sf))
-    assert(indexed == direct,
+    S.saveIvfIndex(spark, sf, dir)
+    val (centroids, assigned) = S.loadIvfIndex(spark, dir)
+    assert(assigned.columns.toSet == Set("vec_id", "cell_id", "emb_bin"))
+    val direct = bitRows(S.annIvf(spark, sf))
+    assert(direct.nonEmpty)
+    assert(bitRows(S.annIvfIndexed(centroids, assigned)) == direct,
       "indexed search must reproduce the monolithic IVF exactly")
-    assert(indexed.nonEmpty)
+    // both registered keys serve the one cached index, end to end
+    Seq("ann_ivf_indexed", "ann_ivf_indexed_packed").foreach { key =>
+      assert(bitRows(SparkEntry.queries(key)(spark, sf)) == direct, key)
+    }
     // budgeted centroid export is loud past the cap
     val e = intercept[IllegalArgumentException] {
-      graft.operators.Similarity.ivfCentroidsExport(centroids,
-        maxCells = 2)
+      S.ivfCentroidsExport(centroids, maxCells = 2)
     }
     assert(e.getMessage.contains("maxCells"))
   }
@@ -402,72 +406,20 @@ class SimilaritySpec extends AnyFunSuite {
     S.saveIvfIndexOf(spark, emb.filter(col("vec_id") % 5 =!= 0), dir)
     S.appendIvfIndex(spark, emb.filter(col("vec_id") % 5 === 0), dir)
     val (centroids, appended) = S.loadIvfIndex(spark, dir)
-    // the appended assignment table == assigning the whole corpus
-    // under the same frozen centroids (append is per-row)
-    def asg(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("vec_id"), col("cell_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(asg(appended) == asg(S.assignCells(emb, centroids)))
+    // the appended cell lists == the whole corpus's cell lists under
+    // the same frozen centroids (append is per-row), blobs included
+    val rebuilt = S.indexRows(emb, centroids)
+    def lists(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("vec_id"), col("cell_id"), hex(col("emb_bin"))).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    assert(lists(appended) == lists(rebuilt))
     // and the search over the appended index is bit-equal to the
     // search over that rebuilt assignment
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-        r.getInt(3))).toSeq
-    val viaAppend = rows(S.annIvfIndexed(centroids, appended))
-    val viaRebuild = rows(S.annIvfIndexed(centroids,
-      S.assignCells(emb, centroids)))
-    assert(viaAppend == viaRebuild && viaAppend.nonEmpty)
+    val viaAppend = bitRows(S.annIvfIndexed(centroids, appended))
+    assert(viaAppend == bitRows(S.annIvfIndexed(centroids, rebuilt)) &&
+      viaAppend.nonEmpty)
     // registered query face runs end to end
     assert(S.annIvfAppendQuery(spark, sf).count() > 0)
-  }
-
-  test("packed IVF index (S12xS16): search bit-equal to the array " +
-      "face, append == rebuild, loaders refuse cross-format") {
-    import org.apache.spark.sql.functions._
-    val S = graft.operators.Similarity
-    val dirA = java.nio.file.Files
-      .createTempDirectory("graft_ivf_arr").toString
-    val dirP = java.nio.file.Files
-      .createTempDirectory("graft_ivf_pk").toString
-    S.saveIvfIndex(spark, sf, dirA)
-    S.saveIvfIndexPacked(spark, sf, dirP)
-    val (cA, aA) = S.loadIvfIndex(spark, dirA)
-    val (cP, aP) = S.loadIvfIndexPacked(spark, dirP)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        java.lang.Double.doubleToLongBits(r.getDouble(2)),
-        r.getInt(3))).toSeq
-    val arr = rows(S.annIvfIndexed(cA, aA))
-    val pk = rows(S.annIvfIndexedPacked(cP, aP))
-    assert(arr == pk && arr.nonEmpty,
-      "packed index search drifted from the array face")
-    // registered faces agree end to end (each through its own cache)
-    assert(rows(S.annIvfIndexedPackedQuery(spark, sf)) ==
-      rows(S.annIvfIndexedQuery(spark, sf)))
-    // S13xS16 append == rebuilding the packed assignment of the
-    // unioned corpus under the frozen centroids
-    val emb = graft.Tables.embeddings(spark, sf)
-      .select(col("vec_id"), col("embedding").as("emb"))
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("graft_ivf_pk_app").toString
-    S.saveIvfIndexPackedOf(spark, emb.filter(col("vec_id") % 5 =!= 0),
-      dir2)
-    S.appendIvfIndexPacked(spark, emb.filter(col("vec_id") % 5 === 0),
-      dir2)
-    val (c2, appended) = S.loadIvfIndexPacked(spark, dir2)
-    val rebuilt = S.assignCells(emb, c2)
-      .select(col("vec_id"), col("cell_id"),
-        graft.functions.VectorFunctions.packFloats(col("emb"))
-          .as("emb_bin"))
-    assert(rows(S.annIvfIndexedPacked(c2, appended)) ==
-      rows(S.annIvfIndexedPacked(c2, rebuilt)))
-    // cross-format loads refuse at the artifact boundary, by name
-    val e1 = intercept[IllegalArgumentException](
-      S.loadIvfIndexPacked(spark, dirA))
-    assert(e1.getMessage.contains("not a PACKED IVF assignment"))
-    val e2 = intercept[IllegalArgumentException](
-      S.loadIvfIndex(spark, dirP))
-    assert(e2.getMessage.contains("not an IVF assignment"))
   }
 
   test("S18 batch packed serving: bounded-heap face bit-equal to the " +
@@ -477,29 +429,26 @@ class SimilaritySpec extends AnyFunSuite {
     val S = graft.operators.Similarity
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ivf_srv").toString
-    S.saveIvfIndexPacked(spark, sf, dir)
-    val (centroids, assigned) = S.loadIvfIndexPacked(spark, dir)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        java.lang.Double.doubleToLongBits(r.getDouble(2)),
-        r.getInt(3))).toSeq
-    // prefix query table == the window-ranked face, bit for bit
-    // (also re-pins bounded-heap order ≡ window order on this shape)
+    S.saveIvfIndex(spark, sf, dir)
+    val (centroids, assigned) = S.loadIvfIndex(spark, dir)
+    // prefix query table == the monolithic annIvf, whose probe cells
+    // are window-ranked, bit for bit (pins bounded-heap order ≡ window
+    // order on the served shape)
     val prefix = assigned.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("emb_bin").as("q_bin"))
-    assert(rows(S.annIvfSearchPacked(centroids, assigned, prefix)) ==
-      rows(S.annIvfIndexedPacked(centroids, assigned)))
+    assert(bitRows(S.annIvfSearch(centroids, assigned, prefix)) ==
+      bitRows(S.annIvf(spark, sf)))
     // a FOREIGN query id (no corpus vec_id collision) excludes
     // nothing: reusing vec 0's blob under id 10_000_000 must rank
     // vec 0 itself as the top-1 neighbor at cosine 1
     val foreign = assigned.filter(col("vec_id") === 0)
       .select((col("vec_id") + 10000000L).as("query_id"),
         col("emb_bin").as("q_bin"))
-    val got = rows(S.annIvfSearchPacked(centroids, assigned, foreign))
+    val got = bitRows(S.annIvfSearch(centroids, assigned, foreign))
     assert(got.nonEmpty && got.head._1 == 10000000L &&
       got.head._2 == 0L && got.head._4 == 1,
       s"foreign-id self hit missing: ${got.take(3)}")
-    // the cached serving indexes auto-scale their cell count (the
+    // the cached serving index auto-scales its cell count (the
     // knnGraphIvf rule): identical to the historical 8 at every
     // harness correctness scale, corpus-proportional past it — a
     // fixed count lets E[cell] grow linearly and the r20 probe
@@ -510,25 +459,13 @@ class SimilaritySpec extends AnyFunSuite {
       S.autoCells(Long.MaxValue) == (1 << 20))
     // registered face: 1-in-5 of the corpus as queries, k rows each,
     // contiguous ranks
-    val served = S.annIvfSearchPackedQuery(spark, sf)
+    val served = S.annIvfSearchQuery(spark, sf)
     val byQ = served.collect().groupBy(_.getLong(0))
     val nVec = assigned.count()
     assert(byQ.size.toLong == (nVec + 2) / 5,
       s"${byQ.size} query groups for $nVec vectors")
     assert(byQ.values.forall(g =>
       g.map(_.getInt(3)).sorted.toSeq == (1 to g.length)))
-  }
-
-  test("knnGraphIvf packed candidate side (the default) is bit-equal " +
-      "to the array face") {
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        java.lang.Double.doubleToLongBits(r.getDouble(2)),
-        r.getInt(3))).toSeq
-    val pk = rows(Similarity.knnGraphIvf(spark, sf))
-    val arr = rows(Similarity.knnGraphIvf(spark, sf, packed = false))
-    assert(pk == arr && pk.nonEmpty,
-      "packed graph build drifted from the array face")
   }
 
   test("ivfDrift flags an out-of-distribution increment") {
@@ -635,5 +572,18 @@ class SimilaritySpec extends AnyFunSuite {
       graft.operators.Similarity.loadIvfIndex(spark, dir)
     }
     assert(e.getMessage.contains("not an IVF"))
+    // an index with array<float> cell lists (the retired format) is
+    // refused by name, with the rebuild instruction
+    val arr = java.nio.file.Files
+      .createTempDirectory("graft_arr_ivf").toString
+    Seq((0L, Seq(1.0, 0.0))).toDF("cell_id", "c_emb")
+      .write.parquet(s"$arr/centroids")
+    Seq((0L, Seq(1.0f, 0.0f), 0L)).toDF("vec_id", "emb", "cell_id")
+      .write.parquet(s"$arr/assigned")
+    val e2 = intercept[IllegalArgumentException] {
+      graft.operators.Similarity.loadIvfIndex(spark, arr)
+    }
+    assert(e2.getMessage.contains("array-format IVF index") &&
+      e2.getMessage.contains("rebuild"), e2.getMessage)
   }
 }

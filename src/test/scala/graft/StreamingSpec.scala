@@ -697,8 +697,11 @@ class StreamingSpec extends AnyFunSuite {
     val export = Similarity.ivfCentroidsExport(centroids)
     val nProbe = 2; val minCosine = 0.5
 
-    // queries = 5 corpus vectors under fresh ids (no self-filter hit)
-    val corpus = assigned.select("vec_id", "emb", "cell_id").collect()
+    // queries = 5 corpus vectors under fresh ids (no self-filter hit);
+    // the reference reads the vectors unpacked from the index
+    val corpus = assigned.select(col("vec_id"),
+        graft.functions.VectorFunctions.unpackFloats(col("emb_bin")),
+        col("cell_id")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getLong(2)))
     val queries = corpus.take(5).zipWithIndex.map { case ((_, e, _), i) =>
       StreamVec(500000L + i, ts(i), e) }
@@ -959,16 +962,22 @@ class StreamingSpec extends AnyFunSuite {
     val (centroids, assigned) = Similarity.loadIvfIndex(spark, dir)
     val export = Similarity.ivfCentroidsExport(centroids)
     // the batch reference: same persisted index, default
-    // (nProbe=2, k=5, nQueries=10)
+    // (nProbe=2, k=5, nQueries=10), cosines compared bit for bit
     val expected = Similarity.annIvfIndexed(centroids, assigned).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+      .map(r => (r.getLong(0), r.getLong(1),
+        java.lang.Double.doubleToLongBits(r.getDouble(2)), r.getInt(3)))
       .toSet
     assert(expected.nonEmpty)
     // stream the SAME query vectors under their corpus ids, so the
-    // self-filter behaves exactly like the batch search
+    // self-filter behaves exactly like the batch search; they are
+    // unpacked from the index, so the pack-at-arrival path runs end
+    // to end
     val qvecs = assigned.filter(col("vec_id") < 10)
-      .select("vec_id", "emb").collect()
+      .select(col("vec_id"),
+        graft.functions.VectorFunctions.unpackFloats(col("emb_bin")))
+      .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    assert(qvecs.length == 10)
     val in = MemoryStream[StreamVec]
     val q = StreamingOps.streamingAnnTopK(in.toDS(), export, assigned)
       .writeStream.format("memory").queryName("anntopk_out")
@@ -986,53 +995,6 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       q.processAllAvailable()
       val got = spark.table("anntopk_out").collect()
-        .map(r => (r.getAs[Long]("query_id"),
-          r.getAs[Long]("neighbor_id"), r.getAs[Double]("cosine"),
-          r.getAs[Int]("rnk")))
-        .filter(_._1 < 10).toSet
-      assert(got == expected,
-        s"stream-only=${got -- expected} batch-only=${expected -- got}")
-    } finally q.stop()
-  }
-
-  test("X18xS16 packed streaming top-k equals batch " +
-      "annIvfIndexedPacked under one packed index, bit-for-bit") {
-    import graft.operators.Similarity
-    import graft.streaming.StreamingOps.StreamVec
-    val sf = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_x18_pk").toString
-    Similarity.saveIvfIndexPacked(spark, sf, dir)
-    val (centroids, assigned) = Similarity.loadIvfIndexPacked(spark, dir)
-    val export = Similarity.ivfCentroidsExport(centroids)
-    val expected = Similarity.annIvfIndexedPacked(centroids, assigned)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        java.lang.Double.doubleToLongBits(r.getDouble(2)), r.getInt(3)))
-      .toSet
-    assert(expected.nonEmpty)
-    // stream the SAME query vectors (unpacked from the store, so the
-    // pack-at-arrival path is exercised end to end)
-    val qvecs = graft.operators.EmbeddingStore
-      .unpackEmbeddings(assigned.withColumnRenamed("cell_id", "label"))
-      .filter(col("vec_id") < 10)
-      .select("vec_id", "embedding").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    assert(qvecs.length == 10)
-    val in = MemoryStream[StreamVec]
-    val q = StreamingOps.streamingAnnTopKPacked(in.toDS(), export,
-        assigned)
-      .writeStream.format("memory").queryName("anntopk_pk_out")
-      .outputMode("append").start()
-    try {
-      in.addData(qvecs.zipWithIndex.map { case ((id, e), i) =>
-        StreamVec(id, ts(i), e) }.toIndexedSeq: _*)
-      q.processAllAvailable()
-      assert(spark.table("anntopk_pk_out").isEmpty)
-      in.addData(StreamVec(999999L, ts(120), qvecs.head._2))
-      q.processAllAvailable()
-      q.processAllAvailable()
-      val got = spark.table("anntopk_pk_out").collect()
         .map(r => (r.getAs[Long]("query_id"),
           r.getAs[Long]("neighbor_id"),
           java.lang.Double.doubleToLongBits(r.getAs[Double]("cosine")),
@@ -1066,6 +1028,9 @@ class StreamingSpec extends AnyFunSuite {
     val export = Array((0L, base.map(_.toDouble)))
     def ranked(shuffled: Boolean, name: String): Set[(Long, Long, Int)] = {
       val assigned0 = corpus.toDF("cell_id", "vec_id", "emb")
+        .select(col("cell_id"), col("vec_id"),
+          graft.functions.VectorFunctions.packFloats(col("emb"))
+            .as("emb_bin"))
       val assigned =
         if (shuffled) assigned0.orderBy(col("vec_id").desc).repartition(7)
         else assigned0.repartition(2)

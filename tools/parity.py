@@ -3,6 +3,11 @@
 
 Usage: python3 tools/parity.py <sfDir> <verifyOutDir>
 
+An oracle query that DuckDB cannot run (out of memory, SQL error) is
+reported as `✗ <name>: ORACLE-ERROR <type>: <msg>` and counted as a
+fail; the remaining queries are still checked and the script exits
+non-zero.
+
 For each <name>/ parquet dir in verifyOutDir, runs oracle_sql.json[name]
 in DuckDB against the sfDir tables and compares: row count, column
 names (sorted), and per-row values (rows sorted, floats compared
@@ -62,8 +67,13 @@ def main():
         if name not in oracle:
             print(f"  ~ {name}: rows-only ({len(g_rows)} rows, pandas-canon ok)")
             continue
-        exp = con.sql(oracle[name])
-        e_rows, e_cols = exp.fetchall(), [d[0] for d in exp.description]
+        try:
+            exp = con.sql(oracle[name])
+            e_rows, e_cols = exp.fetchall(), [d[0] for d in exp.description]
+        except Exception as e:
+            print(f"  ✗ {name}: ORACLE-ERROR {type(e).__name__}: {e}")
+            n_fail += 1
+            continue
         gc, gn = canon(g_rows, g_cols)
         ec, en = canon(e_rows, e_cols)
         if gn != en:
