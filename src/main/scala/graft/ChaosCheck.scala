@@ -1,7 +1,6 @@
 package graft
 
 import scala.util.{Failure, Success, Try}
-import org.apache.spark.sql.SparkSession
 
 /** Executor-loss chaos check for the `localCheckpoint` fault-tolerance
   * contract (the r18 verdict's #4). The Pipeline scaladoc states the
@@ -70,11 +69,8 @@ object ChaosCheck {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,1,1024]")
-      .config(GraftSession.codegenConf)
-      .appName("graft-chaos")
-      .config("spark.sql.shuffle.partitions", "4")
+    // two executor JVMs of one core each: shuffles sized to 2 slots
+    val spark = GraftSession.builder("local-cluster[2,1,1024]", 2)
       // ABSOLUTE paths: executors run with their cwd inside the
       // worker's app dir, so a relative `target/scala-2.13/classes`
       // entry silently resolves to nothing there — the graft classes
@@ -96,7 +92,6 @@ object ChaosCheck {
       .config("spark.executor.extraJavaOptions",
         org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions())
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sc = spark.sparkContext

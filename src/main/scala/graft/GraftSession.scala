@@ -52,10 +52,4 @@ object GraftSession {
       .config(checkpointConf)
       .config(codegenConf)
       .withExtensions(new GraftExtensions)
-
-  def local(): SparkSession = {
-    val s = builder().getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 }

@@ -1,41 +1,35 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Optimization-round instrument: dump `.explain("formatted")` for
   * every registered query (or the subset named in args) to one file
   * per query, so plan-shape claims (Exchange count, join strategy,
   * PushedFilters/ReadSchema, codegen spans) are checkable offline.
+  * A plan that fails to build is named on stderr, gets no file, and
+  * the run exits 1.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> [_suffix] [names...]
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val outDir = if (args.length > 1) args(1) else "plans/r20"
+    require(args.length >= 2,
+      "usage: runMain graft.PlanDump <sfDir> <outDir> [_suffix] [names...]")
+    val (sfDir, outDir) = (args(0), args(1))
     val suffix = if (args.length > 2) args(2) else "_before"
-    val names = args.drop(3).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config(GraftSession.codegenConf)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val queries = Harness.select(args.toSeq.drop(3)).sortBy(_._1)
+    val spark = Harness.session()
     Files.createDirectories(Paths.get(outDir))
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (names.isEmpty || names.contains(name)) {
-        val plan =
-          try fn(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          catch { case scala.util.control.NonFatal(e) =>
-            s"ERROR building plan: $e" }
+    val failed = queries.filter { case (name, fn) =>
+      Harness.attempt("plandump", name) {
+        val plan = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
         Files.write(Paths.get(s"$outDir/$name$suffix.txt"),
           plan.getBytes("UTF-8"))
         println(s"[plandump] $name -> $outDir/$name$suffix.txt")
-      }
+      }.isEmpty
     }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

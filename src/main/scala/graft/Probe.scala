@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.Similarity
 
 /** Large-scale probe runner (SURVEY §8): times the operators whose
@@ -20,15 +20,6 @@ import graft.operators.Similarity
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sfbig2")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config(GraftSession.codegenConf)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val fromRegistry = Seq(
       "dedup_exact", "dedup_jaccard_pairs", "dedup_jaccard_lsh",
@@ -94,21 +85,21 @@ object Probe {
     // mod 5 = the registry fixture's rate (20% of docs — saturates
     // the Bloom pre-filter at 100×), mod 1000 = the sparse
     // design-regime rate for the *_sparse rows
-    def leakPlanted(dir: String, mod: Int): org.apache.spark.sql.DataFrame =
-      operators.Dedup.holdoutPlanted(spark, dir, mod)
-    def sparseLeakPlanted(dir: String): org.apache.spark.sql.DataFrame =
-      leakPlanted(dir, 1000)
+    def leakPlanted(spark: SparkSession, mod: Int): DataFrame =
+      operators.Dedup.holdoutPlanted(spark, sfDir, mod)
+    def sparseLeakPlanted(spark: SparkSession): DataFrame =
+      leakPlanted(spark, 1000)
 
-    val scaled: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+    val scaled: Seq[(String, SparkSession => DataFrame)] = Seq(
       // head-to-head with the registry's contamination_screen: the
       // driver-indexed flatMap shape vs the broadcast-join + count agg
-      "contamination_screen_indexed" -> (() =>
+      "contamination_screen_indexed" -> (spark =>
         operators.Dedup.screenDocsIndexed(
           graft.Tables.documents(spark, sfDir))),
       // near-dup regime: 16-bit bands -> ~corpus/65536 per bucket +
       // true-duplicate groups; exact pairs (cosine 1.0) recall is 1.0
       // at any scale because identical vectors share every signature
-      "sim_join_lsh_scaled" -> (() =>
+      "sim_join_lsh_scaled" -> (spark =>
         Similarity.simJoinLsh(spark, sfDir, threshold = 0.99,
           nPlanes = 64, nBands = 4, maxBucket = 5000)),
       // the S5-recall contract face at a contract the solver CAN
@@ -117,12 +108,12 @@ object Probe {
       // pinned), logged per run via the lsh_bits/lsh_bands observe
       // metrics. The registered default contract (θ=0.45) REFUSES at
       // this scale by design, naming annIvf — also spec-pinned
-      "sim_join_lsh_at_scaled" -> (() =>
+      "sim_join_lsh_at_scaled" -> (spark =>
         Similarity.simJoinLshAt(spark, sfDir, threshold = 0.95,
           targetRecall = 0.95)),
       // SemDeDup regime: k grows with the corpus so clusters stay
       // bounded (~3k vectors/cell at the 100× probe's 200k)
-      "dedup_semantic_scaled" -> (() =>
+      "dedup_semantic_scaled" -> (spark =>
         operators.Clustering.dedupSemantic(spark, sfDir,
           k = 64, iters = 2, threshold = 0.99)),
       // IVF at honest scale parameters: 64 cells over 200k vectors
@@ -130,31 +121,31 @@ object Probe {
       // 8 — 12.5% of the corpus scanned per query instead of the
       // registry default's 25% (nCells=8, nProbe=2, sized for the
       // oracle corpus)
-      "ann_ivf_scaled" -> (() =>
+      "ann_ivf_scaled" -> (spark =>
         Similarity.annIvf(spark, sfDir, nCells = 64, nProbe = 8,
           k = 10, nQueries = 100)),
       // same query at the library default AutoK: k = ceil(n/1000)
       // from a bounded count (200 cells at the 100× probe's 200k)
-      "dedup_semantic_auto" -> (() =>
+      "dedup_semantic_auto" -> (spark =>
         operators.Clustering.dedupSemantic(spark, sfDir,
           k = operators.Clustering.AutoK, iters = 2,
           threshold = 0.99)),
       // the full semantic pipeline product at auto-k: pairs →
       // components → deduplicated embedding corpus
-      "semdedup_apply_scaled" -> (() =>
+      "semdedup_apply_scaled" -> (spark =>
         operators.Clustering.semdedupApply(spark, sfDir,
           k = operators.Clustering.AutoK, iters = 2,
           threshold = 0.99)),
       // S14 at the library default AutoK (200 cells at the 100×
       // probe's 200k vectors — the window sorts ~1k rows per cell)
-      "embed_prune_proto_scaled" -> (() =>
+      "embed_prune_proto_scaled" -> (spark =>
         operators.Clustering.embedPruneProto(spark, sfDir,
           k = operators.Clustering.AutoK, iters = 2)),
       // shared-derivation chain: jaccard pairs materialized ONCE,
       // clusters resolved from them, corpus filtered from the
       // clusters — vs dedup_jaccard_pairs + dedup_clusters +
       // dedup_apply standalone, which each re-derive the pairs
-      "dedup_chain_shared" -> (() => {
+      "dedup_chain_shared" -> (spark => {
         import org.apache.spark.sql.functions.col
         val pairs = operators.Dedup.jaccardPairs(spark, sfDir)
           .select(col("doc_a"), col("doc_b"))
@@ -169,7 +160,7 @@ object Probe {
       // apply — measures the scored apply's PIPELINE cost directly
       // (standalone dedup_apply_best re-derives pairs+clusters, so
       // its probe row mostly times the jaccard stage again)
-      "dedup_apply_best_chain" -> (() => {
+      "dedup_apply_best_chain" -> (spark => {
         import org.apache.spark.sql.functions.col
         val pairs = operators.Dedup.jaccardPairs(spark, sfDir)
           .select(col("doc_a"), col("doc_b"))
@@ -182,7 +173,7 @@ object Probe {
       // head-to-head with the registry's substring_scrub: the
       // never-collects shuffle-join shape vs the broadcast-frontier
       // default, on the same planted corpus
-      "substring_scrub_join" -> (() => {
+      "substring_scrub_join" -> (spark => {
         import org.apache.spark.sql.functions.{col, concat, lit, when}
         val phrase = (0 until 10).map(i => s"sp$i").mkString(" ")
         val planted = graft.Tables.documents(spark, sfDir)
@@ -196,7 +187,7 @@ object Probe {
       // feeding the deterministic selection AND a seeded sample — vs
       // dsir_select + dsir_select_sampled standalone, which each
       // re-derive the two-model weight pass (~14 s of their probe rows)
-      "dsir_chain_shared" -> (() => {
+      "dsir_chain_shared" -> (spark => {
         import org.apache.spark.sql.functions.col
         val docs = graft.Tables.documents(spark, sfDir)
         val w = operators.Search.dsirWeights(spark, sfDir)
@@ -217,34 +208,57 @@ object Probe {
       // the realistic benchmark-leak rate, on the SAME corpus for
       // both shapes so the broadcast/join ratio in the probe file is
       // the filter's actual win, not its saturation price
-      "contamination_report_sparse" -> (() =>
-        operators.Dedup.contaminationReport(sparseLeakPlanted(sfDir))),
-      "contamination_report_join_sparse" -> (() =>
-        operators.Dedup.contaminationReportJoin(sparseLeakPlanted(sfDir))),
+      "contamination_report_sparse" -> (spark =>
+        operators.Dedup.contaminationReport(sparseLeakPlanted(spark))),
+      "contamination_report_join_sparse" -> (spark =>
+        operators.Dedup.contaminationReportJoin(sparseLeakPlanted(spark))),
       // the share A/B face for the SATURATED regime: the r17 split
       // checkpoint is a win when the downstream is scan-bound (the
       // sparse row) but must be measured against the recompute plan
       // where the join dominates and memory is tight
-      "contamination_report_join_noshare" -> (() =>
-        operators.Dedup.contaminationReportJoin(leakPlanted(sfDir, 5),
+      "contamination_report_join_noshare" -> (spark =>
+        operators.Dedup.contaminationReportJoin(leakPlanted(spark, 5),
           share = false)),
-      "contamination_report_join_sparse_noshare" -> (() =>
-        operators.Dedup.contaminationReportJoin(sparseLeakPlanted(sfDir),
+      "contamination_report_join_sparse_noshare" -> (spark =>
+        operators.Dedup.contaminationReportJoin(sparseLeakPlanted(spark),
           share = false)),
       // LAST on purpose: the deliberately-degraded join fallback is
       // the probe's heaviest stressor and has twice taken the whole
       // session down with a driver OOM under host memory pressure —
       // run it when nothing is left to poison (or give the forked JVM
       // more heap via SPARK_DRIVER_MEM)
-      "contamination_screen_join" -> (() =>
+      "contamination_screen_join" -> (spark =>
         operators.Dedup.screenDocsJoin(
           graft.Tables.documents(spark, sfDir))))
 
+    val all =
+      fromRegistry.map(n => n -> ((spark: SparkSession) =>
+        SparkEntry.queries(n)(spark, sfDir))) ++ scaled
+    // optional args: query names = run only that subset (re-measure
+    // one operator without paying for the whole probe); --rotate=N
+    // rotates the run order by N positions so no query is pinned to
+    // the session tail — post-stressor session debris (GC pressure,
+    // storage bookkeeping) inflates tail queries up to 4x (SURVEY
+    // §9); two runs at different rotations expose it, min-per-query
+    // is the honest fresh cost
+    val (rotateArgs, names) = args.toSeq.partition(_.startsWith("--rotate="))
+    val rotate = rotateArgs.lastOption.fold(0) { a =>
+      val v = a.drop("--rotate=".length)
+      v.toIntOption.getOrElse(sys.error(s"--rotate=$v is not an integer " +
+        "(usage: runMain graft.Probe [--rotate=N] [query ...])"))
+    }
+    // an unknown name (a typo, or `--rotate 3` split into two args)
+    // fails before the session starts
+    val selected = Harness.select(names, all)
+    val r = ((rotate % selected.size) + selected.size) % selected.size
+    val results = selected.drop(r) ++ selected.take(r)
+
+    val spark = Harness.session()
     // warm codegen/JIT on the small SF so timings are steady-state
     val warmDir = "/root/testdata/sf0.01"
-    fromRegistry.foreach { name =>
-      try SparkEntry.queries(name)(spark, warmDir).count()
-      catch { case _: Throwable => () }
+    val warmFailed = fromRegistry.filter { name =>
+      Harness.attempt("probe", s"$name (warm-up)")(
+        Harness.evaluate(SparkEntry.queries(name)(spark, warmDir))).isEmpty
     }
     // pre-fault the TARGET corpus before timing: run 1 of the r17
     // probe read the freshly-generated parquet cold from disk and
@@ -254,73 +268,21 @@ object Probe {
     // cache-consistent with every later run, so min-merging two runs
     // measures the engine, not the disk (the sf0.01 warmup above
     // compiles the plans but never touches these files)
-    Seq(Tables.documents(spark, sfDir), Tables.embeddings(spark, sfDir),
-        Tables.events(spark, sfDir)).foreach { df =>
-      try df.queryExecution.toRdd.count()
-      catch { case _: Throwable => () }
-    }
-
-    val all =
-      fromRegistry.map(n => n -> (() => SparkEntry.queries(n)(spark, sfDir))) ++
-        scaled.map { case (n, f) => n -> f }
-    // optional args: query names = run only that subset (re-measure
-    // one operator without paying for the whole probe); --rotate=N
-    // rotates the run order by N positions so no query is pinned to
-    // the session tail — post-stressor session debris (GC pressure,
-    // storage bookkeeping) inflates tail queries up to 4x (SURVEY
-    // §9); two runs at different rotations expose it, min-per-query
-    // is the honest fresh cost
-    val rotate = args.collectFirst {
-      case a if a.startsWith("--rotate=") =>
-        val v = a.drop("--rotate=".length)
-        try v.toInt catch {
-          case _: NumberFormatException =>
-            sys.error(s"--rotate=$v is not an integer (usage: " +
-              "runMain graft.Probe [--rotate=N] [query ...])")
-        }
-    }.getOrElse(0)
-    val names = args.filterNot(_.startsWith("--rotate="))
-    // unknown names (a typo, or `--rotate 3` split into two args)
-    // must fail loudly — silently selecting zero queries wastes a
-    // whole Spark session with empty output
-    val known = all.map(_._1).toSet
-    val bad = names.filterNot(known)
-    if (bad.nonEmpty)
-      sys.error(s"unknown queries/flags: ${bad.mkString(", ")} " +
-        s"(usage: runMain graft.Probe [--rotate=N] [query ...])")
-    val selected =
-      if (names.isEmpty) all else all.filter(r => names.contains(r._1))
-    val results =
-      if (selected.isEmpty) selected
-      else {
-        val r = ((rotate % selected.size) + selected.size) % selected.size
-        selected.drop(r) ++ selected.take(r)
+    val prefaultFailed = Seq("documents" -> Tables.documents _,
+        "embeddings" -> Tables.embeddings _, "events" -> Tables.events _)
+      .filter { case (table, read) =>
+        Harness.attempt("probe", s"$table (pre-fault)")(
+          Harness.evaluate(read(spark, sfDir))).isEmpty
       }
-    results.foreach { case (name, mk) =>
-      val t0 = System.nanoTime()
-      val rows =
-        try
-          // force FULL evaluation: count() on the DataFrame lets the
-          // optimizer skip pure projections entirely (timing the
-          // scan, not the operator); counting the physical plan's
-          // InternalRow RDD runs every operator and still yields the
-          // row count in one pass
-          mk().queryExecution.toRdd.count()
-        catch { case e: Throwable =>
-          var root: Throwable = e
-          while (root.getCause != null && root.getCause != root)
-            root = root.getCause
-          val msg = (root.getClass.getSimpleName + ": " +
-            String.valueOf(root.getMessage).take(300))
-            .replaceAll("[\"\\\\\\p{Cntrl}]", " ")
-          println(s"""{"query":"$name","error":"$msg"}""")
-          -1L
-        }
-      if (rows >= 0) {
+    val failed = results.filter { case (name, mk) =>
+      Harness.attempt("probe", name) {
+        val t0 = System.nanoTime()
+        val rows = Harness.evaluate(mk(spark))
         val sec = (System.nanoTime() - t0) / 1e9
         println(f"""{"query":"$name","sec":$sec%.2f,"rows":$rows}""")
-      }
+      }.isEmpty
     }
     spark.stop()
+    if (Seq(warmFailed, prefaultFailed, failed).exists(_.nonEmpty)) sys.exit(1)
   }
 }

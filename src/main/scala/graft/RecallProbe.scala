@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Near-duplicate RECALL measurement on the PERTURBED probe corpus
@@ -33,7 +32,6 @@ import org.apache.spark.sql.functions._
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sfpert")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val copies = args.headOption.map(_.toInt).getOrElse(100)
     // optional method subset after the copy count (cheap re-runs when
     // a long session dies partway): jaccard_lsh minhash simhash ann
@@ -46,13 +44,7 @@ object RecallProbe {
       s"unknown methods: ${badNames.mkString(", ")} (usage: runMain " +
         s"graft.RecallProbe [copies] [${methodNames.mkString("|")} ...])")
     def wanted(m: String): Boolean = picked.isEmpty || picked(m)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config(GraftSession.codegenConf)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import spark.implicits._
     import graft.functions.HashFunctions.{shingle_keys, simhash_text}
     import graft.functions.TextFunctions.fingerprintMd5

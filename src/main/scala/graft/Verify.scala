@@ -1,7 +1,6 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-import scala.util.control.NonFatal
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json, for the DuckDB oracle compare (tools/parity.py).
   * Exits 1 when any query failed, after naming every failure on one
@@ -12,39 +11,23 @@ object Verify {
     * written; returns the failed names in run order.
     */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
-      queries: Seq[(String, (SparkSession, String) => DataFrame)])
-      : Seq[String] =
-    queries.flatMap { case (name, fn) =>
-      try {
+      queries: Seq[(String, Harness.Query)]): Seq[String] =
+    queries.filter { case (name, fn) =>
+      Harness.attempt("verify", name) {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        None
-      } catch { case NonFatal(e) =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        Some(name)
-      }
-    }
+      }.isEmpty
+    }.map(_._1)
 
   def main(args: Array[String]): Unit = {
     // usage: Verify <sfDir> <outDir> [queryName ...] — with names,
     // dump only those queries (plus the full oracle_sql.json) for
     // fast single-operator iteration; the driver passes none.
     val (sfDir, outDir) = (args(0), args(1))
-    val only = args.drop(2).toSet
-    val unknown = only -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config(GraftSession.codegenConf)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = Harness.select(args.toSeq.drop(2))
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    val failed = dump(spark, sfDir, outDir, SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.isEmpty || only(name) })
+    val failed = dump(spark, sfDir, outDir, queries)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -76,7 +76,7 @@ object PackedVectorKernels {
     * every pattern including non-canonical NaNs); the shift-based
     * byte decode below is the BE-host fallback only. The r19 kernels
     * paid 4 byte loads + 3 shift-ors per element on every path, and
-    * the r20 PackedProbe re-run showed that decode was effectively
+    * the r20 packed/array A/B re-run showed that decode was effectively
     * the WHOLE 2M×256 scan-once gap the r19 doc blamed on per-row
     * byte[] materialization: with single loads the packed scan beats
     * the array face in-session (0.52 s vs 0.65 s at 2M×256; the r19

@@ -11,8 +11,8 @@ import graft.functions.VectorFunctions.{cosinePacked, packFloats, unpackFloats}
   * little-endian float32 blob (`binary`, 4·dim bytes) instead of
   * `array<float>`.
   *
-  * Measured story, two rounds of it (graft.PackedProbe, committed as
-  * PROBE_r19_packed_AB.jsonl and PROBE_r20_packed_AB.jsonl): the r18
+  * Measured story, two rounds of it (PROBE_r19_packed_AB.jsonl and
+  * PROBE_r20_packed_AB.jsonl, both faces at dims 64 to 1024): the r18
   * design hypothesis was "parquet per-element list decode dominates
   * at high dim"; r19 half-refuted it — Spark's vectorized reader
   * serves `array<float>` elements as zero-copy views, and the r19

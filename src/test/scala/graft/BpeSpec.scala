@@ -218,8 +218,7 @@ class BpeSpec extends AnyFunSuite {
   test("saveModel/loadModel round-trip the tokenizer byte-for-byte") {
     val docs = graft.Tables.documents(spark, sf)
     val model = Bpe.bpeTrain(docs, nMerges = 60)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_bpe").toFile
+    val dir = TestDirs.create("graft_bpe").toFile
     try {
       val path = s"$dir/merges.parquet"
       Bpe.saveModel(model, path, spark)

@@ -22,6 +22,8 @@ class ChaosSpec extends AnyFunSuite {
       .flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
     val cmd = Seq(javaBin) ++ addOpens ++ Seq(
       "-Xmx4g", "-Dspark.ui.enabled=false",
+      // the harness's temp files land in a dir the suite deletes
+      s"-Djava.io.tmpdir=${TestDirs.create("graft_chaos")}",
       "-Dspark.sql.session.timeZone=UTC",
       "-cp", sys.props("java.class.path"), "graft.ChaosCheck")
     val pb = new ProcessBuilder(cmd: _*)

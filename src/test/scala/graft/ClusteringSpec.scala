@@ -177,7 +177,7 @@ class ClusteringSpec extends AnyFunSuite {
     // give NaN and Spark SQL ranks NaN above any threshold — the old
     // self-join form silently diverged from its oracle here.)
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("zeronorm").toString
+    val dir = TestDirs.create("zeronorm").toString
     val rows = Seq(
       (0L, "a", Seq(1.0f, 0.0f)), (1L, "a", Seq(0.9f, 0.1f)),
       (2L, "a", Seq(0.0f, 0.0f)))

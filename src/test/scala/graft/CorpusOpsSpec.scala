@@ -256,7 +256,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     // yields a trailing empty token; \x0B is NOT whitespace to RE2.
     // Java trim/split("\\s+") gets all three wrong.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("edgews").toString
+    val dir = TestDirs.create("edgews").toString
     Seq((0L, "s", "\tfoo bar baz"), (1L, "s", "foo bar baz\n"),
       (2L, "s", "a\u000bb c d"))
       .toDF("doc_id", "source", "text")
@@ -739,7 +739,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     // tiny split size so every file is its own partition. Each
     // partition's MG summary is its doc's 2 grams → union = 16 > 2.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mgbudget").toString
+    val dir = TestDirs.create("mgbudget").toString
     (0 until 8).map { i =>
       (i.toLong, "s", Array.fill(12)(s"a$i b$i").mkString(" "))
     }.toDF("doc_id", "source", "text")

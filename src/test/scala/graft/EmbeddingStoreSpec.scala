@@ -62,18 +62,32 @@ class EmbeddingStoreSpec extends AnyFunSuite {
   }
 
   test("packed brute-force search is bit-equal to ann_bruteforce") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_packed_store").toString
-    EmbeddingStore.saveEmbeddingStore(spark, sf, dir)
-    val store = EmbeddingStore.loadEmbeddingStore(spark, dir)
-    val packed = EmbeddingStore.annBruteForcePackedOn(store).collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        java.lang.Double.doubleToLongBits(r.getDouble(2)), r.getInt(3)))
-    val exact = Similarity.annBruteForce(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        java.lang.Double.doubleToLongBits(r.getDouble(2)), r.getInt(3)))
-    assert(exact.nonEmpty)
-    assert(packed.toSeq == exact.toSeq)
+    // the 64-dim corpus, and the same vectors tiled to 256 dims with a
+    // per-tile shift (distinct widths exercise the kernels' loop tails
+    // and the store at a realistic embedding width)
+    val wide = TestDirs.create("graft_dim256").toString
+    graft.Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("label"), col("embedding"))
+      .as[(Long, Int, Array[Float])]
+      .map { case (id, lab, v) =>
+        (id, lab, Array.tabulate(256)(i => v(i % 64) + (1 + i / 64) * 1e-4f))
+      }
+      .toDF("vec_id", "label", "embedding")
+      .write.parquet(s"$wide/embeddings.parquet")
+    Seq(sf -> 64, wide -> 256).foreach { case (corpus, dim) =>
+      val dir = TestDirs.create("graft_packed_store").toString
+      EmbeddingStore.saveEmbeddingStore(spark, corpus, dir)
+      val store = EmbeddingStore.loadEmbeddingStore(spark, dir)
+      assert(store.select("dim").distinct().as[Int].collect().toSeq == Seq(dim))
+      val packed = EmbeddingStore.annBruteForcePackedOn(store).collect()
+        .map(r => (r.getLong(0), r.getLong(1),
+          java.lang.Double.doubleToLongBits(r.getDouble(2)), r.getInt(3)))
+      val exact = Similarity.annBruteForce(spark, corpus).collect()
+        .map(r => (r.getLong(0), r.getLong(1),
+          java.lang.Double.doubleToLongBits(r.getDouble(2)), r.getInt(3)))
+      assert(exact.nonEmpty, s"dim $dim")
+      assert(packed.toSeq == exact.toSeq, s"dim $dim")
+    }
   }
 
   test("registered ann_bruteforce_packed equals ann_bruteforce " +
@@ -87,8 +101,7 @@ class EmbeddingStoreSpec extends AnyFunSuite {
 
   test("foreign tables refuse at load; mixed dims refuse in the " +
       "kernel and the offline audit") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_packed_bad").toString
+    val dir = TestDirs.create("graft_packed_bad").toString
     Seq((1L, "x")).toDF("a", "b").write.parquet(s"$dir/foreign")
     val e1 = intercept[IllegalArgumentException] {
       EmbeddingStore.loadEmbeddingStore(spark, s"$dir/foreign")
@@ -171,8 +184,7 @@ class EmbeddingStoreSpec extends AnyFunSuite {
   test("ArtifactCache GCs stale fingerprint siblings and aged " +
       "orphan builds; the live cache and young builds survive") {
     import graft.operators.ArtifactCache
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_cache_gc").toFile
+    val root = TestDirs.create("graft_cache_gc").toFile
     def mk(name: String, ageMs: Long = 0L): java.io.File = {
       val d = new java.io.File(root, name)
       assert(d.mkdirs())

@@ -119,7 +119,7 @@ class EmqxConnectorSpec extends AnyFunSuite {
   test("streaming source delivers messages across parallel readers") {
     val name = freshBroker()
     val b = BrokerRegistry.get(name)
-    val ckpt = Files.createTempDirectory("emqx-ckpt-").toString
+    val ckpt = TestDirs.create("emqx-ckpt-").toString
 
     val df = spark.readStream.format("emqx")
       .option("broker", name).option("clientid", "r-")
@@ -154,7 +154,7 @@ class EmqxConnectorSpec extends AnyFunSuite {
   test("recovery: restart from checkpoint picks up messages published while down") {
     val name = freshBroker()
     val b = BrokerRegistry.get(name)
-    val ckpt = Files.createTempDirectory("emqx-ckpt-").toString
+    val ckpt = TestDirs.create("emqx-ckpt-").toString
     RecoveryCollector.clear()
 
     // memory sink can't recover from a checkpoint; collect via
@@ -186,7 +186,7 @@ class EmqxConnectorSpec extends AnyFunSuite {
     val name = freshBroker()
     val b = BrokerRegistry.get(name)
     b.offline = true
-    val ckpt = Files.createTempDirectory("emqx-off-").toString
+    val ckpt = TestDirs.create("emqx-off-").toString
     val q = spark.readStream.format("emqx")
       .option("broker", name).option("clientid", "off-")
       .option("group", "g").option("topicfilter", "t/#")
@@ -208,7 +208,7 @@ class EmqxConnectorSpec extends AnyFunSuite {
   test("crash mid-stream: restart from checkpoint loses no messages") {
     val name = freshBroker()
     val b = BrokerRegistry.get(name)
-    val ckpt = Files.createTempDirectory("emqx-crash-").toString
+    val ckpt = TestDirs.create("emqx-crash-").toString
     RecoveryCollector.clear()
     CrashOnce.reset()
 
@@ -256,7 +256,7 @@ class EmqxConnectorSpec extends AnyFunSuite {
   test("end-to-end: emqx source -> watermarked windowed agg") {
     val name = freshBroker()
     val b = BrokerRegistry.get(name)
-    val ckpt = Files.createTempDirectory("emqx-win-").toString
+    val ckpt = TestDirs.create("emqx-win-").toString
     val windowed = spark.readStream.format("emqx")
       .option("broker", name).option("clientid", "win-")
       .option("group", "g").option("topicfilter", "m/#")
@@ -291,7 +291,7 @@ class EmqxConnectorSpec extends AnyFunSuite {
     val b = BrokerRegistry.get(name)
     b.connect("result-watcher", cleanStart = true)
     b.subscribe("result-watcher", "counts/#", 1)
-    val ckpt = Files.createTempDirectory("emqx-ckpt-").toString
+    val ckpt = TestDirs.create("emqx-ckpt-").toString
 
     val counts = spark.readStream.format("emqx")
       .option("broker", name).option("clientid", "wc-")
@@ -357,8 +357,8 @@ class EmqxConnectorSpec extends AnyFunSuite {
         .writeStream.format("memory").queryName(s"ckpt_fmt_$tag")
         .outputMode("complete")
         .option("checkpointLocation", ckpt).start()
-    val plainCkpt = Files.createTempDirectory("ckpt-plain-").toString
-    val graftCkpt = Files.createTempDirectory("ckpt-graft-").toString
+    val plainCkpt = TestDirs.create("ckpt-plain-").toString
+    val graftCkpt = TestDirs.create("ckpt-graft-").toString
     val qp = start(spark, "fmtp", plainCkpt)
     val qg = start(graftSpark, "fmtg", graftCkpt)
     try {
@@ -399,7 +399,7 @@ class EmqxConnectorSpec extends AnyFunSuite {
         (spark, graftSpark, "p2g"), (graftSpark, spark, "g2p"))) {
       val name = freshBroker()
       val b = BrokerRegistry.get(name)
-      val ckpt = Files.createTempDirectory(s"ckpt-$tag-").toString
+      val ckpt = TestDirs.create(s"ckpt-$tag-").toString
       RecoveryCollector.clear()
       def start(s: SparkSession) = s.readStream.format("emqx")
         .option("broker", name).option("clientid", s"$tag-")

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.EmqxMessage
@@ -147,7 +146,7 @@ class GraftSurfaceSpec extends AnyFunSuite {
     val bd = BrokerRegistry.get(dst)
     bd.connect("watch", cleanStart = true)
     bd.subscribe("watch", "echo/#", 1)
-    val ckpt = Files.createTempDirectory("emqx-w-").toString
+    val ckpt = TestDirs.create("emqx-w-").toString
 
     val q = spark.readStream.format("emqx")
       .option("broker", src).option("clientid", "s-")
@@ -173,7 +172,7 @@ class GraftSurfaceSpec extends AnyFunSuite {
   test("admission control caps batch size at maxmessagesperbatch") {
     val name = "surface-admission"
     val b = BrokerRegistry.get(name)
-    val ckpt = Files.createTempDirectory("emqx-adm-").toString
+    val ckpt = TestDirs.create("emqx-adm-").toString
     val q = spark.readStream.format("emqx")
       .option("broker", name).option("clientid", "a-")
       .option("group", "g").option("topicfilter", "t/#")

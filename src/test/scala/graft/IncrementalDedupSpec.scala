@@ -105,8 +105,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("persisted index round-trips bit-exactly through parquet") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_inc_idx").toString
+    val dir = TestDirs.create("graft_inc_idx").toString
     val old = IncrementalDedup.oldDocs(spark, sf)
     val fresh = IncrementalDedup.newDocs(spark, sf)
     IncrementalDedup.saveIndex(old, dir)
@@ -133,8 +132,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
       col("doc_id") % 5 === 2)
     val day1 = all.filter(col("doc_id") % 5 === 4)
     val probe = all.filter(col("doc_id") % 5 === 0) // tomorrow's batch
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_append_idx").toString
+    val dir = TestDirs.create("graft_append_idx").toString
     IncrementalDedup.saveIndex(day0, dir)
     IncrementalDedup.appendIndex(day1, dir)
     val appended = IncrementalDedup.loadIndex(spark, dir)
@@ -154,8 +152,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("loadIndex refuses a table without the index schema") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_bad_idx").toString
+    val dir = TestDirs.create("graft_bad_idx").toString
     import spark.implicits._
     Seq((1L, "x")).toDF("doc_id", "text").write
       .mode("overwrite").parquet(dir)

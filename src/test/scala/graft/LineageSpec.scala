@@ -40,8 +40,7 @@ class LineageSpec extends AnyFunSuite {
     val baseScrub = graft.operators.Pipeline.pipelineScrub(docs)
       .collect().map(_.toString).sorted.toSeq
     assert(base.nonEmpty && baseScrub.nonEmpty)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lineage_ckpt").toString
+    val dir = TestDirs.create("graft_lineage_ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     spark.conf.set(Lineage.ReliableConf, "true")
     try {
@@ -63,8 +62,8 @@ class LineageSpec extends AnyFunSuite {
       // the shared session has no public way to UNSET the checkpoint
       // dir; leave it pointing at a fresh empty temp dir so later
       // suites see the same observable state as before (no files)
-      spark.sparkContext.setCheckpointDir(java.nio.file.Files
-        .createTempDirectory("graft_lineage_ckpt_reset").toString)
+      spark.sparkContext.setCheckpointDir(
+        TestDirs.create("graft_lineage_ckpt_reset").toString)
     }
   }
 }

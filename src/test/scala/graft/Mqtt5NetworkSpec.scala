@@ -262,7 +262,7 @@ class Mqtt5NetworkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("TLS: full round trip over ssl:// with a generated certificate") {
     import scala.sys.process._
-    val dir = java.nio.file.Files.createTempDirectory("mqtt-tls").toString
+    val dir = TestDirs.create("mqtt-tls").toString
     val keystore = s"$dir/server.p12"
     // self-signed server cert via the JDK's keytool; client trusts
     // the same store (it holds the cert) as its truststore
@@ -364,7 +364,7 @@ class Mqtt5NetworkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("fetch proxy over TLS: truststored client fetches, naked client is refused") {
     import scala.sys.process._
-    val dir = java.nio.file.Files.createTempDirectory("proxy-tls").toString
+    val dir = TestDirs.create("proxy-tls").toString
     val keystore = s"$dir/proxy.p12"
     val cmd = Seq("keytool", "-genkeypair", "-alias", "proxy",
       "-keyalg", "RSA", "-keysize", "2048", "-validity", "1",
@@ -843,7 +843,7 @@ class Mqtt5NetworkSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("spark checkpoint restart over tcp://: no loss across a stopped query") {
     withServer { (_, _, conf) =>
       val spark = SparkTestSession.spark
-      val ckpt = java.nio.file.Files.createTempDirectory("net-ckpt").toString
+      val ckpt = TestDirs.create("net-ckpt").toString
       RecoveryCollector.clear()
       // memory sink can't recover from a checkpoint; collect via
       // foreach (same-JVM global set), as the mem-broker recovery
@@ -904,7 +904,7 @@ class Mqtt5NetworkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // new data" and was never planned
     withServer { (_, _, conf) =>
       val spark = SparkTestSession.spark
-      val ckpt = java.nio.file.Files.createTempDirectory("stall-ckpt").toString
+      val ckpt = TestDirs.create("stall-ckpt").toString
       CountingCollector.clear()
       def startQuery() = spark.readStream.format("emqx")
         .option("broker", conf.uri)
@@ -959,7 +959,7 @@ class Mqtt5NetworkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // with no idempotent-sink crutch.
     withServer { (backing, _, conf) =>
       val spark = SparkTestSession.spark
-      val ckpt = java.nio.file.Files.createTempDirectory("drain-ckpt").toString
+      val ckpt = TestDirs.create("drain-ckpt").toString
       CountingCollector.clear()
       def startQuery() = spark.readStream.format("emqx")
         .option("broker", conf.uri)

@@ -125,8 +125,7 @@ class MultimodalSpec extends AnyFunSuite {
     import graft.multimodal.MediaCodecs
     val spark2 = spark
     import spark2.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_media_ship").toFile
+    val dir = TestDirs.create("graft_media_ship").toFile
     try {
       val png = MediaCodecs.encodePng(8, 6, "shipped".getBytes("UTF-8"))
       Seq((99001L, "png", png))

@@ -114,7 +114,7 @@ class NbSpec extends AnyFunSuite {
   }
 
   test("a persisted NB model loads bit-identical and refuses a truncated artifact") {
-    val dir = java.nio.file.Files.createTempDirectory("nbmodel").toString
+    val dir = TestDirs.create("nbmodel").toString
     val fit = Classify.nbModelSaved(spark, sf, s"$dir/m")
     val loaded = Classify.loadModel(spark, s"$dir/m")
     assert(loaded.langs.toSeq == fit.langs.toSeq)

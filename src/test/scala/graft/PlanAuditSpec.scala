@@ -819,8 +819,7 @@ class PlanAuditSpec extends AnyFunSuite {
         CorpusOps.bannedDomainLineFrontier(histSite, minDf = 3)))
 
     // X16/X22 incremental screens over one persisted minhash index
-    val incDir = java.nio.file.Files
-      .createTempDirectory("graft_lint_incix").toString
+    val incDir = TestDirs.create("graft_lint_incix").toString
     val oldDocs = IncrementalDedup.oldDocs(spark, sf)
     IncrementalDedup.saveIndex(oldDocs, incDir)
     val incIx = IncrementalDedup.loadIndex(spark, incDir)
@@ -832,8 +831,7 @@ class PlanAuditSpec extends AnyFunSuite {
         docStream(sampleText).toDS(), incIx, oldDocs))
 
     // X17/X18 ANN faces over one persisted IVF index
-    val ivfDir = java.nio.file.Files
-      .createTempDirectory("graft_lint_ivf").toString
+    val ivfDir = TestDirs.create("graft_lint_ivf").toString
     Similarity.saveIvfIndex(spark, sf, ivfDir)
     val (centroids, assigned) = Similarity.loadIvfIndex(spark, ivfDir)
     val export = Similarity.ivfCentroidsExport(centroids)

@@ -96,7 +96,7 @@ class SimilaritySpec extends AnyFunSuite {
     // identical vectors share every band signature whatever the
     // plane count, so a >64-plane config must find all planted
     // duplicate pairs at a near-1.0 threshold
-    val tmp = java.nio.file.Files.createTempDirectory("dupvec").toString
+    val tmp = TestDirs.create("dupvec").toString
     val base = (0 until 50).map(i =>
       Array.tabulate(64)(d => math.sin(i * 64 + d).toFloat))
     val rows = (0L until 100L).map(i =>
@@ -376,8 +376,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("persisted IVF index answers bit-equal to the monolithic annIvf") {
     val S = graft.operators.Similarity
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_idx").toString
+    val dir = TestDirs.create("graft_ivf_idx").toString
     S.saveIvfIndex(spark, sf, dir)
     val (centroids, assigned) = S.loadIvfIndex(spark, dir)
     assert(assigned.columns.toSet == Set("vec_id", "cell_id", "emb_bin"))
@@ -399,8 +398,7 @@ class SimilaritySpec extends AnyFunSuite {
   test("appendIvfIndex == rebuilt assignment under the frozen centroids") {
     import org.apache.spark.sql.functions._
     val S = graft.operators.Similarity
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_app").toString
+    val dir = TestDirs.create("graft_ivf_app").toString
     val emb = graft.Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").as("emb"))
     S.saveIvfIndexOf(spark, emb.filter(col("vec_id") % 5 =!= 0), dir)
@@ -427,8 +425,7 @@ class SimilaritySpec extends AnyFunSuite {
       "registered batch face serves 1-in-5 of the corpus") {
     import org.apache.spark.sql.functions._
     val S = graft.operators.Similarity
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_srv").toString
+    val dir = TestDirs.create("graft_ivf_srv").toString
     S.saveIvfIndex(spark, sf, dir)
     val (centroids, assigned) = S.loadIvfIndex(spark, dir)
     // prefix query table == the monolithic annIvf, whose probe cells
@@ -471,8 +468,7 @@ class SimilaritySpec extends AnyFunSuite {
   test("ivfDrift flags an out-of-distribution increment") {
     import org.apache.spark.sql.functions._
     val S = graft.operators.Similarity
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_drift").toString
+    val dir = TestDirs.create("graft_ivf_drift").toString
     val emb = graft.Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").as("emb"))
     S.saveIvfIndexOf(spark, emb.filter(col("vec_id") % 5 =!= 0), dir)
@@ -564,8 +560,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("loadIvfIndex refuses foreign tables") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_bad_ivf").toString
+    val dir = TestDirs.create("graft_bad_ivf").toString
     Seq((1L, "x")).toDF("a", "b").write.parquet(s"$dir/centroids")
     Seq((1L, "x")).toDF("a", "b").write.parquet(s"$dir/assigned")
     val e = intercept[IllegalArgumentException] {
@@ -574,8 +569,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(e.getMessage.contains("not an IVF"))
     // an index with array<float> cell lists (the retired format) is
     // refused by name, with the rebuild instruction
-    val arr = java.nio.file.Files
-      .createTempDirectory("graft_arr_ivf").toString
+    val arr = TestDirs.create("graft_arr_ivf").toString
     Seq((0L, Seq(1.0, 0.0))).toDF("cell_id", "c_emb")
       .write.parquet(s"$arr/centroids")
     Seq((0L, Seq(1.0f, 0.0f), 0L)).toDF("vec_id", "emb", "cell_id")

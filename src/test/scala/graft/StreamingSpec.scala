@@ -595,8 +595,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.StreamingOps.StreamDoc
     import graft.operators.IncrementalDedup
     val sf = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_x16_idx").toString
+    val dir = TestDirs.create("graft_x16_idx").toString
     IncrementalDedup.saveIndex(IncrementalDedup.oldDocs(spark, sf), dir)
     val index = IncrementalDedup.loadIndex(spark, dir)
 
@@ -650,8 +649,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.operators.IncrementalDedup
     import spark.implicits._
     val sf = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_x22_idx").toString
+    val dir = TestDirs.create("graft_x22_idx").toString
     val old = IncrementalDedup.oldDocs(spark, sf)
     IncrementalDedup.saveIndex(old, dir)
     val index = IncrementalDedup.loadIndex(spark, dir)
@@ -690,8 +688,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.StreamingOps.StreamVec
     import graft.operators.Similarity
     val sf = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_x17_ivf").toString
+    val dir = TestDirs.create("graft_x17_ivf").toString
     Similarity.saveIvfIndex(spark, sf, dir)
     val (centroids, assigned) = Similarity.loadIvfIndex(spark, dir)
     val export = Similarity.ivfCentroidsExport(centroids)
@@ -956,8 +953,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.operators.Similarity
     import graft.streaming.StreamingOps.StreamVec
     val sf = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_x18_ivf").toString
+    val dir = TestDirs.create("graft_x18_ivf").toString
     Similarity.saveIvfIndex(spark, sf, dir)
     val (centroids, assigned) = Similarity.loadIvfIndex(spark, dir)
     val export = Similarity.ivfCentroidsExport(centroids)
@@ -1174,7 +1170,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
     import graft.streaming.{GraftCheckpointFileManager, NioLocalFileSystem}
     val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val dir = java.nio.file.Files.createTempDirectory("ckpt-mgr-")
+    val dir = TestDirs.create("ckpt-mgr-")
     // a plain LocalFileSystem sits in Hadoop's JVM-wide cache first
     assert(FileSystem.get(dir.toUri, conf).isInstanceOf[LocalFileSystem])
     for (p <- Seq(new Path(dir.toUri), new Path(dir.toString))) {

@@ -193,7 +193,7 @@ class TextDedupSpec extends AnyFunSuite {
     // quadratic bucket; with it, only the genuinely-shared pairs with
     // df <= cap survive.
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("hotshingle").toString
+    val tmp = TestDirs.create("hotshingle").toString
     val hot = "common boilerplate header"
     val docs = (0L until 200L).map { i =>
       // each doc: the hot shingle + a unique tail; docs 0 and 1 also

@@ -7,7 +7,7 @@ class VerifySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   test("dump names a failing query and still writes every other query") {
-    val out = java.nio.file.Files.createTempDirectory("graft_verify").toString
+    val out = TestDirs.create("graft_verify").toString
     def ok(n: Long): (SparkSession, String) => DataFrame =
       (s, _) => s.range(n).toDF("id")
     val queries = Seq[(String, (SparkSession, String) => DataFrame)](

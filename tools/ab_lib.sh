@@ -1,7 +1,8 @@
-# Shared scaffolding for the interleaved A/B scripts (bench_ab.sh,
-# probe_ab.sh): the JDK-17 module opens Spark needs outside
-# spark-submit, the snapshot existence check, and the A/B pair loop.
-# Source this; do not execute it.
+# Shared scaffolding for the bare-JVM run scripts (bench_ab.sh,
+# probe_ab.sh, bench_loop.sh): the JDK-17 module opens Spark needs
+# outside spark-submit, the snapshot existence check, and the A/B pair
+# loop. The runs inherit SPARK_GRAFT_CPUS from the caller; unset, the
+# session uses every core the JVM sees. Source this; do not execute it.
 
 AB_ADDOPENS=""
 for _p in java.lang java.lang.invoke java.lang.reflect java.io java.net \

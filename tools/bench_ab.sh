@@ -18,7 +18,6 @@ ab_check_snapshot "$TAG_A"
 ab_check_snapshot "$TAG_B"
 ab_run_one() { # $1 = binary tag, $2 = pair idx
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-  SPARK_GRAFT_CPUS=32 \
   SPARK_GRAFT_BENCH_OUT=target/bench_ab_${1}_p${2}.json \
   java $AB_ADDOPENS -Xmx${SPARK_DRIVER_MEM:-8g} \
     -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \

@@ -8,25 +8,20 @@
 # from swapping classes under the JVM.
 #
 # usage: tools/bench_loop.sh <tag> <first-run-idx> <last-run-idx>
+#   The session uses SPARK_GRAFT_CPUS cores when the caller sets it,
+#   else every core the JVM sees.
 set -u
 cd /root/repo
 TAG=${1:?tag}
 i=${2:?first}
 END=${3:?last}
-ADDOPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent \
-         java.util.concurrent.atomic sun.nio.ch sun.nio.cs \
-         sun.security.action sun.util.calendar; do
-  ADDOPENS="$ADDOPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. tools/ab_lib.sh
 while [ "$i" -le "$END" ]; do
   rm -rf target/bench_cls
   cp -a target/scala-2.13/classes target/bench_cls
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-  SPARK_GRAFT_CPUS=32 \
   SPARK_GRAFT_BENCH_OUT=target/bench_${TAG}_run${i}.json \
-  java $ADDOPENS -Xmx"${SPARK_DRIVER_MEM:-8g}" \
+  java $AB_ADDOPENS -Xmx"${SPARK_DRIVER_MEM:-8g}" \
     -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
     -cp "target/bench_cls:/opt/spark/jars/*" graft.Bench \
     > target/bench_${TAG}_run${i}.log 2>&1

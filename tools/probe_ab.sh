@@ -27,7 +27,6 @@ ab_check_snapshot "$TAG_A"
 ab_check_snapshot "$TAG_B"
 ab_run_one() { # $1 = binary tag, $2 = pair idx
   SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/tmp/sfpert} \
-  SPARK_GRAFT_CPUS=32 \
   java $AB_ADDOPENS -Xmx${SPARK_DRIVER_MEM:-16g} \
     -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
     -cp "target/bench_cls_${1}:/opt/spark/jars/*" graft.Probe $QUERIES \
