@@ -254,12 +254,15 @@ object Probe {
     val results = selected.drop(r) ++ selected.take(r)
 
     val spark = Harness.session()
-    // warm codegen/JIT on the small SF so timings are steady-state
+    // warm codegen/JIT on the small SF so timings are steady-state —
+    // only the registry queries this run times (all of them when no
+    // names are given)
     val warmDir = "/root/testdata/sf0.01"
-    val warmFailed = fromRegistry.filter { name =>
-      Harness.attempt("probe", s"$name (warm-up)")(
-        Harness.evaluate(SparkEntry.queries(name)(spark, warmDir))).isEmpty
-    }
+    val warmFailed = selected.map(_._1).filter(fromRegistry.contains)
+      .filter { name =>
+        Harness.attempt("probe", s"$name (warm-up)")(
+          Harness.evaluate(SparkEntry.queries(name)(spark, warmDir))).isEmpty
+      }
     // pre-fault the TARGET corpus before timing: run 1 of the r17
     // probe read the freshly-generated parquet cold from disk and
     // paid 2–6× on the first ~10 heavy rows — entirely erased by a

@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
+import scala.reflect.ClassTag
 import graft.Tables.documents
 
 /** Corpus-level training-data operators: statistics and layouts that
@@ -675,6 +679,202 @@ object CorpusOps {
   private[graft] def splitParagraphs(t: String): Array[String] =
     t.split(java.util.regex.Pattern.quote("\n\n"), -1)
 
+  /** The rows every frontier mine and rebuild scans — (doc_id, text,
+    * carry…) — round-robined first when `spread` (each face's
+    * [[graft.plans.Spread]] choice).
+    */
+  private def frontierRows(docs: DataFrame, carry: Seq[String],
+      spread: Boolean): DataFrame = {
+    val rows = docs.select(("doc_id" +: "text" +: carry).map(col): _*)
+    if (spread) graft.plans.Spread.spreadIfNarrow(rows) else rows
+  }
+
+  /** Sort `hs` in place and return its distinct values. */
+  private def sortedDistinct(hs: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(hs)
+    var i = 0
+    var n = 0
+    while (i < hs.length) {
+      if (n == 0 || hs(n - 1) != hs(i)) { hs(n) = hs(i); n += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(hs, n)
+  }
+
+  /** The one frontier mine of the scrub family (line, paragraph,
+    * per-domain line, token-window and sentence-window). `keysOf`
+    * hashes each (doc_id, text, carry…) row's segments into a FRESH
+    * array; the per-doc sort-distinct makes df count DISTINCT docs
+    * (SQL's count(DISTINCT doc_id)) and keeps the shuffle Θ(distinct
+    * keys); a partial-agged groupBy counts df, and the keys with
+    * df ≥ `minDf` come back through a bounded driver collect that
+    * fails loudly with `refusal` past `budget`. Two result shapes:
+    *  - `owned = false` emits 8-byte hashes and returns the sorted
+    *    key set (owners empty) — the banned frontier;
+    *  - `owned = true` emits (hash, doc_id) and returns the sorted
+    *    keys with each key's aligned min-owner doc_id — the
+    *    shared-window frontier of the span scrubs.
+    */
+  private def mineFrontier(docs: DataFrame, carry: Seq[String],
+      spread: Boolean, keysOf: Row => Array[Long], owned: Boolean,
+      minDf: Int, budget: Int,
+      refusal: String): (Array[Long], Array[Long]) = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val rows = frontierRows(docs, carry, spread)
+    def guard[K](got: Array[K]): Array[K] = {
+      require(got.length <= budget, refusal)
+      got
+    }
+    if (owned) {
+      val shared = guard(rows
+        .flatMap(r => sortedDistinct(keysOf(r)).map(h => (h, r.getLong(0))))
+        .toDF("h", "doc_id")
+        .groupBy(col("h"))
+        .agg(min(col("doc_id")).as("owner"), count(lit(1)).as("df"))
+        .filter(col("df") >= minDf)
+        .select(col("h"), col("owner")).as[(Long, Long)]
+        .limit(budget + 1).collect()).sortBy(_._1)
+      (shared.map(_._1), shared.map(_._2))
+    } else {
+      val banned = guard(rows.flatMap(r => sortedDistinct(keysOf(r)))
+        .toDF("h")
+        .groupBy(col("h")).agg(count(lit(1)).as("df"))
+        .filter(col("df") >= minDf)
+        .select(col("h")).as[Long]
+        .limit(budget + 1).collect())
+      java.util.Arrays.sort(banned)
+      (banned, Array.emptyLongArray)
+    }
+  }
+
+  /** The banned (df ≥ `minDf`) frontier of line, paragraph and
+    * per-domain line dedup, as the sorted hash array their rebuild
+    * binary-searches.
+    */
+  private def bannedFrontier(docs: DataFrame, carry: Seq[String],
+      keysOf: Row => Array[Long], minDf: Int, maxBanned: Int,
+      what: String): Array[Long] = {
+    require(minDf >= 2,
+      s"minDf must be >= 2 (1 would drop every segment): $minDf")
+    require(maxBanned > 0, s"maxBanned must be > 0: $maxBanned")
+    // r21: no spread on this mine scan — the split+hash kernel is too
+    // cheap to buy back a full-text round-robin exchange (measured at
+    // sf0.1: line_dedup 0.48 → 0.53 s, paragraph_dedup 0.50 → 0.56 s
+    // with the spread); the df groupBy already spreads the aggregation
+    mineFrontier(docs, carry, spread = false, keysOf, owned = false,
+      minDf, maxBanned,
+      s"$what frontier exceeds maxBanned=$maxBanned — raise the " +
+        "budget or raise minDf; refusing an unbounded driver collect")._1
+  }
+
+  /** The one frontier rebuild: `frontier` is broadcast once and one
+    * typed map per doc runs `kernel(frontier, (doc_id, text, carry…))`,
+    * emitting (doc_id, carry…, clean_text, n_kept, n_dropped). A pure
+    * projection — no join, zero data shuffles past the optional
+    * spread, text never crosses the wire, one row per input doc
+    * (emptied docs stay with empty `clean_text`). The carried columns
+    * ride the row: `source` for the composed pipelines (no doc_id
+    * self-join to re-attach it), `ts` (and `domain`) for the streams
+    * (a caller's watermark survives). The registered batch faces add
+    * their `orderBy(doc_id)` on top.
+    */
+  private[graft] def frontierRebuild[F: ClassTag](docs: DataFrame,
+      carry: Seq[String], spread: Boolean, frontier: F)(
+      kernel: (F, Row) => (String, Long, Long)): DataFrame = {
+    val rows = frontierRows(docs, carry, spread)
+    val bc = docs.sparkSession.sparkContext.broadcast(frontier)
+    val out = StructType(
+      StructField("doc_id", LongType, nullable = false) +:
+        rows.schema.fields.drop(2).map(_.copy(nullable = true)).toSeq :+
+        StructField("clean_text", StringType) :+
+        StructField("n_kept", LongType, nullable = false) :+
+        StructField("n_dropped", LongType, nullable = false))
+    rows.map { r =>
+      val (txt, kept, dropped) = kernel(bc.value, r)
+      val n = r.length
+      val vs = new Array[Any](n + 2)
+      vs(0) = r.get(0)
+      var i = 2
+      while (i < n) { vs(i - 1) = r.get(i); i += 1 }
+      vs(n - 1) = txt
+      vs(n) = kept
+      vs(n + 1) = dropped
+      new GenericRow(vs): Row
+    }(Encoders.row(out))
+  }
+
+  /** The one drop-and-rejoin kernel of the frontier family (batch and
+    * stream): `hs(i)` hashes the window of `w` segments starting at
+    * `i`; a window found on the sorted frontier `keys` cuts its
+    * segments — with an aligned `owners`, only when the window's
+    * owner is a LOWER id than `id` (an empty `owners` is the banned
+    * shape: every hit cuts). Survivors rejoin with `sep` in original
+    * order. Returns (clean_text, n_kept, n_dropped).
+    */
+  private def scrubSegments(segs: Array[String], hs: Array[Long],
+      keys: Array[Long], owners: Array[Long], id: Long, w: Int,
+      sep: String): (String, Long, Long) = {
+    val cut = new Array[Boolean](segs.length)
+    var i = 0
+    while (i < hs.length) {
+      val p = java.util.Arrays.binarySearch(keys, hs(i))
+      if (p >= 0 && (owners.isEmpty || owners(p) < id)) {
+        var j = i
+        while (j < i + w) { cut(j) = true; j += 1 }
+      }
+      i += 1
+    }
+    rejoin(segs, cut, sep)
+  }
+
+  /** Survivors of `cut` rejoined with `sep` in original order:
+    * (clean_text, n_kept, n_dropped).
+    */
+  private def rejoin(segs: Array[String], cut: Array[Boolean],
+      sep: String): (String, Long, Long) = {
+    val sb = new java.lang.StringBuilder
+    var kept = 0L
+    var i = 0
+    while (i < segs.length) {
+      if (!cut(i)) {
+        if (kept > 0) sb.append(sep)
+        sb.append(segs(i))
+        kept += 1
+      }
+      i += 1
+    }
+    (sb.toString, kept, segs.length - kept)
+  }
+
+  /** The [[frontierRebuild]] kernels, one per granularity, shared by
+    * the batch faces, the composed pipelines and the
+    * X10/X21/X29/X12/X20 streams.
+    */
+  private def segmentScrub(split: String => Array[String],
+      sep: String): (Array[Long], Row) => (String, Long, Long) =
+    (banned, r) => {
+      val ss = split(r.getString(1))
+      scrubSegments(ss, ss.map(lineHash), banned, Array.emptyLongArray,
+        r.getLong(0), 1, sep)
+    }
+  private[graft] val lineScrub = segmentScrub(splitLines, "\n")
+  private[graft] val paragraphScrub = segmentScrub(splitParagraphs, "\n\n")
+  private[graft] val domainLineScrub
+      : (Array[Long], Row) => (String, Long, Long) = (banned, r) => {
+    val dom = r.getAs[String]("domain")
+    val ls = splitLines(r.getString(1))
+    scrubSegments(ls, ls.map(siteLineHash(dom, _)), banned,
+      Array.emptyLongArray, r.getLong(0), 1, "\n")
+  }
+  private[graft] def windowScrub(w: Int)
+      : ((Array[Long], Array[Long]), Row) => (String, Long, Long) =
+    (f, r) => scrubTokens(duckTokens(r.getString(1)), r.getLong(0),
+      f._1, f._2, w)
+  private[graft] def sentenceScrub(n: Int)
+      : ((Array[Long], Array[Long]), Row) => (String, Long, Long) =
+    (f, r) => scrubSentences(r.getString(1), r.getLong(0), f._1, f._2, n)
+
   /** The banned-paragraph frontier of [[paragraphDedup]]'s df pass —
     * exposed (the [[bannedLineFrontier]] convention) so a STREAMING
     * pipeline can mine it from the historical corpus once and scrub
@@ -682,7 +882,20 @@ object CorpusOps {
     */
   def bannedParagraphFrontier(docs: DataFrame, minDf: Int = 3,
       maxBanned: Int = 4000000): Array[Long] =
-    bannedSegmentFrontier(docs, splitParagraphs, minDf, maxBanned)
+    bannedFrontier(docs, Nil,
+      r => splitParagraphs(r.getString(1)).map(lineHash), minDf,
+      maxBanned, "banned-line")
+
+  /** The banned-line frontier of [[lineDedup]]'s df pass, as the
+    * sorted hash array the rebuild scan binary-searches — exposed so
+    * a STREAMING pipeline can mine the frontier from the historical
+    * corpus once and scrub arrivals statelessly
+    * ([[graft.streaming.StreamingOps.streamingLineDedup]]).
+    */
+  def bannedLineFrontier(docs: DataFrame, minDf: Int = 3,
+      maxBanned: Int = 4000000): Array[Long] =
+    bannedFrontier(docs, Nil, r => splitLines(r.getString(1)).map(lineHash),
+      minDf, maxBanned, "banned-line")
 
   /** T19 — LINE-LEVEL corpus dedup (the C4 / RefinedWeb boilerplate
     * pass): a line that occurs in `minDf`-or-more DISTINCT documents
@@ -695,124 +908,28 @@ object CorpusOps {
     * repeated chrome.
     *
     * Scale shape — two scans, text never shuffles:
-    *  1. df scan: typed flatMap emits each doc's DISTINCT line
-    *     hashes (8 bytes/line, per-doc dedupe before the exchange),
-    *     partial-agged count, filter `df >= minDf`. Only long hashes
-    *     cross the wire.
-    *  2. rebuild scan: the banned frontier (boilerplate is by nature
-    *     a tiny fraction of distinct lines) is a bounded driver
-    *     collect — `maxBanned` guards the budget with a loud failure,
-    *     the boilerplateShare/IVF-fit precedent — broadcast as a
-    *     sorted long[]; one typed map per doc binary-searches each
-    *     line and rejoins survivors. Pure projection, zero shuffles.
+    *  1. df scan ([[mineFrontier]]): each doc's DISTINCT line hashes
+    *     (8 bytes/line), partial-agged count, filter `df >= minDf`.
+    *     Only long hashes cross the wire.
+    *  2. rebuild scan ([[frontierRebuild]]): the banned frontier
+    *     (boilerplate is by nature a tiny fraction of distinct lines)
+    *     is a bounded driver collect — `maxBanned` guards the budget
+    *     with a loud failure, the boilerplateShare/IVF-fit precedent —
+    *     broadcast as a sorted long[]; one typed map per doc
+    *     binary-searches each line and rejoins survivors. Pure
+    *     projection, zero shuffles (no spread either: a split+search
+    *     kernel never repays a full-text exchange).
     *
     * Docs whose every line is boilerplate stay in the corpus with
     * empty `clean_text` (the pipeline's length filter drops them
     * downstream — this operator must not silently change corpus
     * membership).
     */
-  /** The banned-line frontier of [[lineDedup]]'s df pass, as the
-    * sorted hash array the rebuild scan binary-searches — exposed so
-    * a STREAMING pipeline can mine the frontier from the historical
-    * corpus once and scrub arrivals statelessly
-    * ([[graft.streaming.StreamingOps.streamingLineDedup]]).
-    */
-  def bannedLineFrontier(docs: DataFrame, minDf: Int = 3,
-      maxBanned: Int = 4000000): Array[Long] =
-    bannedSegmentFrontier(docs, splitLines, minDf, maxBanned)
-
-  /** The df-mine shared by [[lineDedup]] and [[paragraphDedup]]:
-    * hashes of segments present in ≥ `minDf` distinct docs, as a
-    * sorted primitive array (bounded loud driver collect).
-    */
-  private def bannedSegmentFrontier(docs: DataFrame,
-      split: String => Array[String], minDf: Int,
-      maxBanned: Int): Array[Long] = {
-    require(minDf >= 2,
-      s"minDf must be >= 2 (1 would drop every segment): $minDf")
-    require(maxBanned > 0, s"maxBanned must be > 0: $maxBanned")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // r21: the r20 spread is GONE from this mine scan — the
-    // split+hash kernel is too cheap to buy back the added full-text
-    // round-robin exchange (measured at sf0.1: line_dedup 0.48 →
-    // 0.53 s, paragraph_dedup 0.50 → 0.56 s with the spread, and both
-    // ran ~2.5× SLOWER on 32 cores than 8 — guide §2.4 "remove
-    // shuffles outright" beats §2.5 parallelism here). The df groupBy
-    // below already spreads the aggregation; only the per-doc split
-    // kernel stays on the scan's own partitions.
-    val bannedRows = docs.select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .flatMap { case (_, t) =>
-        val hs = split(t).map(lineHash)
-        java.util.Arrays.sort(hs)
-        // per-doc dedupe: a line repeated WITHIN one doc counts once
-        // toward df (count of distinct docs), like the SQL
-        // count(DISTINCT doc_id)
-        var i = 0
-        var n = 0
-        val out = new Array[Long](hs.length)
-        while (i < hs.length) {
-          if (n == 0 || out(n - 1) != hs(i)) { out(n) = hs(i); n += 1 }
-          i += 1
-        }
-        out.take(n)
-      }
-      .toDF("h")
-      .groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df") >= minDf)
-      .select(col("h")).as[Long]
-      .limit(maxBanned + 1)
-      .collect()
-    require(bannedRows.length <= maxBanned,
-      s"banned-line frontier exceeds maxBanned=$maxBanned — raise the " +
-        "budget or raise minDf; refusing an unbounded driver collect")
-    java.util.Arrays.sort(bannedRows)
-    bannedRows
-  }
-
   def lineDedup(docs: DataFrame, minDf: Int = 3,
       maxBanned: Int = 4000000): DataFrame =
-    segmentDedup(docs, splitLines, "\n", minDf, maxBanned)
-
-  /** [[lineDedup]] carrying `source` through the rebuild scan — the
-    * composed-pipeline entry point: P1/P2 previously re-attached
-    * `source` by joining the cleaned corpus back onto the input on
-    * doc_id — a corpus-sized join on BOTH sides whose two exchanges
-    * carry the full cleaned text. The typed rebuild map can just
-    * carry the column. One row per input doc (no filtering), so the
-    * rows are identical to `docs.select(doc_id, source) ⋈
-    * lineDedup(docs)`, minus the registered face's diagnostic
-    * orderBy and counters.
-    */
-  private[operators] def lineDedupWithSource(docs: DataFrame,
-      minDf: Int = 3, maxBanned: Int = 4000000): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(
-      bannedSegmentFrontier(docs, splitLines, minDf, maxBanned))
-    // r21: no spread (the segmentDedup rebuild rationale — cheap
-    // kernel, zero-shuffle rebuild)
-    docs.select(col("doc_id"), col("source"), col("text"))
-      .as[(Long, String, String)]
-      .map { case (id, src, t) =>
-        val ls = splitLines(t)
-        val sb = new java.lang.StringBuilder
-        var kept = 0L
-        var i = 0
-        while (i < ls.length) {
-          if (java.util.Arrays.binarySearch(bc.value,
-              lineHash(ls(i))) < 0) {
-            if (kept > 0) sb.append("\n")
-            sb.append(ls(i))
-            kept += 1
-          }
-          i += 1
-        }
-        (id, src, sb.toString)
-      }
-      .toDF("doc_id", "source", "clean_text")
-  }
+    frontierRebuild(docs, Nil, spread = false,
+      bannedLineFrontier(docs, minDf, maxBanned))(lineScrub)
+      .orderBy(col("doc_id"))
 
   /** T34 — PARAGRAPH-LEVEL corpus dedup: [[lineDedup]] at
     * blank-line granularity (the RefinedWeb/MassiveText variant —
@@ -831,43 +948,9 @@ object CorpusOps {
     */
   def paragraphDedup(docs: DataFrame, minDf: Int = 3,
       maxBanned: Int = 4000000): DataFrame =
-    segmentDedup(docs, splitParagraphs, "\n\n", minDf, maxBanned)
-
-  /** The rebuild scan shared by line- and paragraph-granularity
-    * dedup: drop frontier segments, rejoin survivors with `sep`.
-    */
-  private def segmentDedup(docs: DataFrame,
-      split: String => Array[String], sep: String, minDf: Int,
-      maxBanned: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // r21: no spread on the rebuild scan (the mine-scan rationale
-    // above — a split+binary-search kernel never repays a full-text
-    // exchange; the rebuild previously had ZERO data shuffles)
-    val ds = docs.select(col("doc_id"), col("text")).as[(Long, String)]
-    val bc = spark.sparkContext.broadcast(
-      bannedSegmentFrontier(docs, split, minDf, maxBanned))
-    ds.map { case (id, t) =>
-        val ls = split(t)
-        val sb = new java.lang.StringBuilder
-        var kept = 0L
-        var dropped = 0L
-        var i = 0
-        while (i < ls.length) {
-          if (java.util.Arrays.binarySearch(bc.value, lineHash(ls(i))) >= 0)
-            dropped += 1
-          else {
-            if (kept > 0) sb.append(sep)
-            sb.append(ls(i))
-            kept += 1
-          }
-          i += 1
-        }
-        (id, sb.toString, kept, dropped)
-      }
-      .toDF("doc_id", "clean_text", "n_kept", "n_dropped")
+    frontierRebuild(docs, Nil, spread = false,
+      bannedParagraphFrontier(docs, minDf, maxBanned))(paragraphScrub)
       .orderBy(col("doc_id"))
-  }
 
   /** The registered `paragraph_dedup` query: the sf docs are
     * single-line (and so single-paragraph), so the query PLANTS
@@ -930,40 +1013,11 @@ object CorpusOps {
     * statelessly given their domain.
     */
   def bannedDomainLineFrontier(docs: DataFrame, minDf: Int = 3,
-      maxBanned: Int = 4000000): Array[Long] = {
-    require(minDf >= 2,
-      s"minDf must be >= 2 (1 would drop every line): $minDf")
-    require(maxBanned > 0, s"maxBanned must be > 0: $maxBanned")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val banned = docs.select(col("doc_id"), col("domain"), col("text"))
-      .as[(Long, String, String)]
-      .flatMap { case (_, dom, t) =>
-        val hs = splitLines(t).map(siteLineHash(dom, _))
-        java.util.Arrays.sort(hs)
-        // per-doc dedupe: df counts DISTINCT docs per (domain, line)
-        var i = 0
-        var n = 0
-        val out = new Array[Long](hs.length)
-        while (i < hs.length) {
-          if (n == 0 || out(n - 1) != hs(i)) { out(n) = hs(i); n += 1 }
-          i += 1
-        }
-        out.take(n)
-      }
-      .toDF("h")
-      .groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df") >= minDf)
-      .select(col("h")).as[Long]
-      .limit(maxBanned + 1)
-      .collect()
-    require(banned.length <= maxBanned,
-      s"banned (domain, line) frontier exceeds maxBanned=$maxBanned — " +
-        "raise the budget or raise minDf; refusing an unbounded driver " +
-        "collect")
-    java.util.Arrays.sort(banned)
-    banned
-  }
+      maxBanned: Int = 4000000): Array[Long] =
+    bannedFrontier(docs, Seq("domain"), r => {
+        val dom = r.getString(2)
+        splitLines(r.getString(1)).map(siteLineHash(dom, _))
+      }, minDf, maxBanned, "banned (domain, line)")
 
   /** T47 — PER-DOMAIN (site-level) boilerplate line removal: a line
     * occurring in ≥ `minDf` distinct documents OF THE SAME REGISTERED
@@ -993,34 +1047,10 @@ object CorpusOps {
     * contract).
     */
   def domainLineDedup(docs: DataFrame, minDf: Int = 3,
-      maxBanned: Int = 4000000): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val ds = docs.select(col("doc_id"), col("domain"), col("text"))
-      .as[(Long, String, String)]
-    val bc = spark.sparkContext.broadcast(
-      bannedDomainLineFrontier(docs, minDf, maxBanned))
-    ds.map { case (id, dom, t) =>
-        val ls = splitLines(t)
-        val sb = new java.lang.StringBuilder
-        var kept = 0L
-        var dropped = 0L
-        var i = 0
-        while (i < ls.length) {
-          if (java.util.Arrays.binarySearch(bc.value,
-              siteLineHash(dom, ls(i))) >= 0) dropped += 1
-          else {
-            if (kept > 0) sb.append('\n')
-            sb.append(ls(i))
-            kept += 1
-          }
-          i += 1
-        }
-        (id, dom, sb.toString, kept, dropped)
-      }
-      .toDF("doc_id", "domain", "clean_text", "n_kept", "n_dropped")
+      maxBanned: Int = 4000000): DataFrame =
+    frontierRebuild(docs, Seq("domain"), spread = false,
+      bannedDomainLineFrontier(docs, minDf, maxBanned))(domainLineScrub)
       .orderBy(col("doc_id"))
-  }
 
   /** The registered `domain_line_dedup` query: the T39 planted-URL
     * fixture supplies the registered domain, and the text plants (the
@@ -1090,24 +1120,28 @@ object CorpusOps {
       .orderBy(col("n"))
   }
 
-  /** Window-position FNV-64 hashes of a doc's tokens: one hash per
-    * START position of a `w`-token window, over the space-joined
-    * window bytes (identical to the oracle's
-    * `array_to_string(tk[i:i+w-1], ' ')` string). O(n·w) per doc —
-    * the [[Dedup.screenNgramOverlap]] convention; positions are NOT
+  /** Window-position FNV-64 hashes of a doc's units: one hash per
+    * START position of a `w`-unit window, over the window's unit
+    * bytes joined by the byte `sep`. Tokens join with ' ' (identical
+    * to the oracle's `array_to_string(tk[i:i+w-1], ' ')` string);
+    * sentence units with 0x00 (injective up to 64-bit collisions —
+    * the hash-key family contract; NULs cannot appear as unit
+    * boundaries because units carry their own bytes). O(n·w) per doc
+    * — the [[Dedup.screenNgramOverlap]] convention; positions are NOT
     * deduped here (the scrub needs every occurrence's coverage).
     */
-  private def windowHashes(tk: Array[String], w: Int): Array[Long] = {
-    if (tk.length < w) Array.emptyLongArray
+  private def windowHashes(units: Array[String], w: Int,
+      sep: Long): Array[Long] = {
+    if (units.length < w) Array.emptyLongArray
     else {
-      val out = new Array[Long](tk.length - w + 1)
+      val out = new Array[Long](units.length - w + 1)
       var i = 0
-      while (i <= tk.length - w) {
+      while (i <= units.length - w) {
         var h = 0xcbf29ce484222325L
         var j = 0
         while (j < w) {
-          if (j > 0) { h ^= ' '.toLong; h *= 0x100000001b3L }
-          val bs = tk(i + j).getBytes("UTF-8")
+          if (j > 0) { h ^= sep; h *= 0x100000001b3L }
+          val bs = units(i + j).getBytes("UTF-8")
           var b = 0
           while (b < bs.length) {
             h ^= bs(b) & 0xffL; h *= 0x100000001b3L; b += 1
@@ -1121,31 +1155,6 @@ object CorpusOps {
     }
   }
 
-  /** D15 — SPAN-LEVEL SUBSTRING SCRUB: the APPLY form of D10's
-    * exact-substring criterion, done the way the Lee et al. 2022
-    * pipeline (arXiv:2107.06499) actually edits the corpus — REMOVE
-    * the duplicated span, not the document: every token covered by a
-    * verbatim `w`-token window that also occurs in an EARLIER
-    * (lower doc_id) document is cut, and the surviving tokens are
-    * rejoined in order (single spaces — the tokenizer-canonical form;
-    * original inter-token whitespace is not preserved). The first
-    * occurrence keeps its text; exact duplicates therefore scrub to
-    * an empty `clean_text` (substring dedup subsumes exact dedup),
-    * and docs sharing only a quoted passage lose just the passage —
-    * [[lineDedup]] generalized from line granularity to token
-    * windows.
-    *
-    * Scale shape (the [[lineDedup]] two-scan recipe): only windows
-    * with df ≥ 2 can scrub anything (a df-1 window's min owner is the
-    * doc itself), so the frontier is (hash, min-owner) of SHARED
-    * windows only — per-doc-distinct 8-byte emits, partial-agged
-    * min/count, bounded driver collect guarded by `maxShared` with a
-    * loud failure (~16 bytes/window; the default 4M ≈ 64 MB),
-    * broadcast as two sorted primitive arrays. The rebuild scan is a
-    * pure typed map — zero data shuffles, text never crosses the
-    * wire. Exact up to 64-bit window-hash collisions (the hash-key
-    * family contract).
-    */
   /** The shared-window frontier of [[substringScrub]]'s df pass —
     * `(sorted window hashes, aligned min-owner ids)` — exposed so a
     * STREAMING pipeline can mine it from the historical corpus once
@@ -1156,86 +1165,39 @@ object CorpusOps {
   def sharedWindowFrontier(docs: DataFrame, w: Int = 8,
       maxShared: Int = 4000000): (Array[Long], Array[Long]) = {
     require(w >= 2 && w <= 64, s"w out of range: $w")
-    require(maxShared > 0, s"maxShared must be > 0: $maxShared")
-    val spark = docs.sparkSession
-    import spark.implicits._
     // r20: spread the mine scan — the tokenize+hash kernel otherwise
     // runs on the small file's single scan partition (guide §2.5);
     // no-op on any real multi-split input
-    val shared = graft.plans.Spread.spreadIfNarrow(
-        docs.select(col("doc_id"), col("text")))
-      .as[(Long, String)]
-      .flatMap { case (id, t) =>
-        val hs = windowHashes(duckTokens(t), w).clone()
-        // per-doc dedupe: df counts distinct docs, and one emit per
-        // (window, doc) keeps the shuffle Θ(distinct windows)
-        java.util.Arrays.sort(hs)
-        var i = 0
-        var n = 0
-        while (i < hs.length) {
-          if (n == 0 || hs(n - 1) != hs(i)) { hs(n) = hs(i); n += 1 }
-          i += 1
-        }
-        java.util.Arrays.copyOf(hs, n).map(h => (h, id))
-      }
-      .toDF("h", "doc_id")
-      .groupBy(col("h"))
-      .agg(min(col("doc_id")).as("owner"), count(lit(1)).as("df"))
-      .filter(col("df") >= 2)
-      .select(col("h"), col("owner")).as[(Long, Long)]
-      .limit(maxShared + 1)
-      .collect()
-    require(shared.length <= maxShared,
+    sharedFrontier(docs, spread = true,
+      r => windowHashes(duckTokens(r.getString(1)), w, ' '), maxShared,
       s"shared-window frontier exceeds maxShared=$maxShared (~16 bytes " +
         "per window on the driver and in the broadcast) — raise the " +
         "budget knowingly or raise w; refusing an unbounded driver " +
         "collect")
-    val sorted = shared.sortBy(_._1)
-    (sorted.map(_._1), sorted.map(_._2))
   }
 
-  /** Rebuild a doc from its coverage mask: survivors rejoin with
-    * single spaces. Returns (clean_text, n_kept, n_dropped).
+  /** The (hash, min-owner) frontier of the span scrubs: windows in
+    * ≥ 2 docs (a df-1 window's owner is the doc itself and can never
+    * scrub).
     */
-  private def rebuildFrom(tk: Array[String],
-      covered: Array[Boolean]): (String, Long, Long) = {
-    val sb = new java.lang.StringBuilder
-    var kept = 0L
-    var dropped = 0L
-    var j = 0
-    while (j < tk.length) {
-      if (covered(j)) dropped += 1
-      else {
-        if (kept > 0) sb.append(' ')
-        sb.append(tk(j))
-        kept += 1
-      }
-      j += 1
-    }
-    (sb.toString, kept, dropped)
+  private def sharedFrontier(docs: DataFrame, spread: Boolean,
+      keysOf: Row => Array[Long], maxShared: Int,
+      refusal: String): (Array[Long], Array[Long]) = {
+    require(maxShared > 0, s"maxShared must be > 0: $maxShared")
+    mineFrontier(docs, Nil, spread, keysOf, owned = true, 2, maxShared,
+      refusal)
   }
 
-  /** The per-doc scrub kernel shared by the batch rebuild scan and
-    * the streaming twin: cut every token covered by a frontier window
-    * whose owner is a LOWER id, rejoin survivors with single spaces.
-    * Returns (clean_text, n_kept, n_dropped).
+  /** The per-doc token-window kernel shared by the batch rebuild
+    * scan and the X12 stream: cut every token covered by a frontier
+    * window whose owner is a LOWER id, rejoin survivors with single
+    * spaces ([[scrubSegments]]). Returns (clean_text, n_kept,
+    * n_dropped).
     */
   private[graft] def scrubTokens(tk: Array[String], id: Long,
       keys: Array[Long], owners: Array[Long],
-      w: Int): (String, Long, Long) = {
-    val hs = windowHashes(tk, w)
-    val covered = new Array[Boolean](tk.length)
-    var i = 0
-    while (i < hs.length) {
-      val p = java.util.Arrays.binarySearch(keys, hs(i))
-      if (p >= 0 && owners(p) < id) {
-        var j = i
-        while (j < i + w) { covered(j) = true; j += 1 }
-      }
-      i += 1
-    }
-    rebuildFrom(tk, covered)
-  }
+      w: Int): (String, Long, Long) =
+    scrubSegments(tk, windowHashes(tk, w, ' '), keys, owners, id, w, " ")
 
   /** The SHUFFLE-JOIN scrub shape for corpora whose shared-window
     * frontier exceeds any driver budget — the [[substringScrub]] /
@@ -1264,13 +1226,24 @@ object CorpusOps {
     */
   def substringScrubJoin(docs: DataFrame, w: Int = 8): DataFrame = {
     require(w >= 2 && w <= 64, s"w out of range: $w")
+    spanScrubJoin(docs, w, duckTokens, windowHashes(_, w, ' '), " ")
+  }
+
+  /** The never-collects span scrub behind [[substringScrubJoin]] and
+    * [[sentenceSpanScrubJoin]]: `unitsOf` splits a doc into units,
+    * `hashesOf` hashes every `w`-unit window start, survivors rejoin
+    * with `sep`.
+    */
+  private def spanScrubJoin(docs: DataFrame, w: Int,
+      unitsOf: String => Array[String],
+      hashesOf: Array[String] => Array[Long], sep: String): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val ds = docs.select(col("doc_id"), col("text")).as[(Long, String)]
     val occ = ds
       .flatMap { case (id, t) =>
-        val hs = windowHashes(duckTokens(t), w)
-        hs.iterator.zipWithIndex.map { case (h, i) => (h, id, i) }
+        hashesOf(unitsOf(t)).iterator.zipWithIndex
+          .map { case (h, i) => (h, id, i) }
       }
       .toDF("h", "doc_id", "pos")
     val owners = occ.groupBy(col("h"))
@@ -1285,60 +1258,49 @@ object CorpusOps {
         coalesce(col("bad"), array()).as("bad"))
       .as[(Long, String, Seq[Int])]
       .map { case (id, t, badPos) =>
-        val tk = duckTokens(t)
-        val covered = new Array[Boolean](tk.length)
+        val units = unitsOf(t)
+        val cut = new Array[Boolean](units.length)
         badPos.foreach { p =>
           var j = p
-          while (j < p + w && j < tk.length) { covered(j) = true; j += 1 }
+          while (j < p + w && j < units.length) { cut(j) = true; j += 1 }
         }
-        val (txt, kept, dropped) = rebuildFrom(tk, covered)
+        val (txt, kept, dropped) = rejoin(units, cut, sep)
         (id, txt, kept, dropped)
       }
       .toDF("doc_id", "clean_text", "n_kept", "n_dropped")
       .orderBy(col("doc_id"))
   }
 
-  def substringScrub(docs: DataFrame, w: Int = 8,
-      maxShared: Int = 4000000): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val (keys, owners) = sharedWindowFrontier(docs, w, maxShared)
-    val bc = spark.sparkContext.broadcast((keys, owners))
-    graft.plans.Spread.spreadIfNarrow(
-        docs.select(col("doc_id"), col("text"))).as[(Long, String)]
-      .map { case (id, t) =>
-        val (txt, kept, dropped) = scrubTokens(duckTokens(t), id,
-          bc.value._1, bc.value._2, w)
-        (id, txt, kept, dropped)
-      }
-      .toDF("doc_id", "clean_text", "n_kept", "n_dropped")
-      .orderBy(col("doc_id"))
-  }
-
-  /** [[substringScrub]] carrying `source` through the rebuild scan —
-    * the composed-pipeline entry point (the [[lineDedupWithSource]]
-    * rationale): P2 previously re-attached `source` with a
-    * corpus-sized self-join on doc_id, shuffling the scrubbed text
-    * twice for a column the typed map can just carry. Rows identical
-    * to `docs.select(doc_id, source) ⋈ substringScrub(docs)` minus
-    * the registered face's diagnostic orderBy and n_dropped.
+  /** D15 — SPAN-LEVEL SUBSTRING SCRUB: the APPLY form of D10's
+    * exact-substring criterion, done the way the Lee et al. 2022
+    * pipeline (arXiv:2107.06499) actually edits the corpus — REMOVE
+    * the duplicated span, not the document: every token covered by a
+    * verbatim `w`-token window that also occurs in an EARLIER
+    * (lower doc_id) document is cut, and the surviving tokens are
+    * rejoined in order (single spaces — the tokenizer-canonical form;
+    * original inter-token whitespace is not preserved). The first
+    * occurrence keeps its text; exact duplicates therefore scrub to
+    * an empty `clean_text` (substring dedup subsumes exact dedup),
+    * and docs sharing only a quoted passage lose just the passage —
+    * [[lineDedup]] generalized from line granularity to token
+    * windows.
+    *
+    * Scale shape (the [[lineDedup]] two-scan recipe): only windows
+    * with df ≥ 2 can scrub anything (a df-1 window's min owner is the
+    * doc itself), so the frontier is (hash, min-owner) of SHARED
+    * windows only — per-doc-distinct 8-byte emits, partial-agged
+    * min/count, bounded driver collect guarded by `maxShared` with a
+    * loud failure (~16 bytes/window; the default 4M ≈ 64 MB),
+    * broadcast as two sorted primitive arrays. The rebuild scan is a
+    * pure typed map — zero data shuffles, text never crosses the
+    * wire. Exact up to 64-bit window-hash collisions (the hash-key
+    * family contract).
     */
-  private[operators] def substringScrubWithSource(docs: DataFrame,
-      w: Int = 8, maxShared: Int = 4000000): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val (keys, owners) = sharedWindowFrontier(docs, w, maxShared)
-    val bc = spark.sparkContext.broadcast((keys, owners))
-    graft.plans.Spread.spreadIfNarrow(
-        docs.select(col("doc_id"), col("source"), col("text")))
-      .as[(Long, String, String)]
-      .map { case (id, src, t) =>
-        val (txt, kept, _) = scrubTokens(duckTokens(t), id,
-          bc.value._1, bc.value._2, w)
-        (id, src, txt, kept)
-      }
-      .toDF("doc_id", "source", "clean_text", "n_kept")
-  }
+  def substringScrub(docs: DataFrame, w: Int = 8,
+      maxShared: Int = 4000000): DataFrame =
+    frontierRebuild(docs, Nil, spread = true,
+      sharedWindowFrontier(docs, w, maxShared))(windowScrub(w))
+      .orderBy(col("doc_id"))
 
   /** The registered `substring_scrub` query: natural word-soup shares
     * no verbatim 8-token windows, so (the screen_ngram_overlap
@@ -1390,36 +1352,6 @@ object CorpusOps {
     out.toArray
   }
 
-  /** FNV-64 hash per START position of an `n`-unit sentence window,
-    * units joined by a 0x00 separator (injective up to 64-bit
-    * collisions — the hash-key family contract; NULs cannot appear
-    * as unit boundaries because units carry their own bytes).
-    */
-  private def sentenceWindowHashes(units: Array[String],
-      n: Int): Array[Long] = {
-    if (units.length < n) Array.emptyLongArray
-    else {
-      val out = new Array[Long](units.length - n + 1)
-      var i = 0
-      while (i <= units.length - n) {
-        var h = 0xcbf29ce484222325L
-        var w = 0
-        while (w < n) {
-          if (w > 0) { h ^= 0L; h *= 0x100000001b3L }
-          val bs = units(i + w).getBytes("UTF-8")
-          var b = 0
-          while (b < bs.length) {
-            h ^= bs(b) & 0xffL; h *= 0x100000001b3L; b += 1
-          }
-          w += 1
-        }
-        out(i) = h
-        i += 1
-      }
-      out
-    }
-  }
-
   /** The shared-window frontier of [[sentenceSpanScrub]]'s df pass —
     * the [[sharedWindowFrontier]] recipe at sentence-window
     * granularity: `(sorted window hashes, aligned min-owner ids)` of
@@ -1428,36 +1360,13 @@ object CorpusOps {
   def sharedSentenceFrontier(docs: DataFrame, n: Int = 3,
       maxShared: Int = 4000000): (Array[Long], Array[Long]) = {
     require(n >= 2 && n <= 64, s"n out of range: $n")
-    require(maxShared > 0, s"maxShared must be > 0: $maxShared")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val shared = docs.select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .flatMap { case (id, t) =>
-        val hs = sentenceWindowHashes(splitSentenceUnits(t), n).clone()
-        java.util.Arrays.sort(hs)
-        var i = 0
-        var m = 0
-        while (i < hs.length) {
-          if (m == 0 || hs(m - 1) != hs(i)) { hs(m) = hs(i); m += 1 }
-          i += 1
-        }
-        java.util.Arrays.copyOf(hs, m).map(h => (h, id))
-      }
-      .toDF("h", "doc_id")
-      .groupBy(col("h"))
-      .agg(min(col("doc_id")).as("owner"), count(lit(1)).as("df"))
-      .filter(col("df") >= 2)
-      .select(col("h"), col("owner")).as[(Long, Long)]
-      .limit(maxShared + 1)
-      .collect()
-    require(shared.length <= maxShared,
+    sharedFrontier(docs, spread = false,
+      r => windowHashes(splitSentenceUnits(r.getString(1)), n, 0L),
+      maxShared,
       s"shared-sentence frontier exceeds maxShared=$maxShared (~16 " +
         "bytes per window on the driver and in the broadcast) — raise " +
         "the budget knowingly or raise n; refusing an unbounded " +
         "driver collect")
-    val sorted = shared.sortBy(_._1)
-    (sorted.map(_._1), sorted.map(_._2))
   }
 
   /** T35 — THREE-SENTENCE-SPAN DEDUP (the LITERAL C4 dedup unit,
@@ -1479,52 +1388,23 @@ object CorpusOps {
     * Exact up to 64-bit window-hash collisions.
     */
   def sentenceSpanScrub(docs: DataFrame, n: Int = 3,
-      maxShared: Int = 4000000): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val (keys, owners) = sharedSentenceFrontier(docs, n, maxShared)
-    val bc = spark.sparkContext.broadcast((keys, owners))
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .map { case (id, t) =>
-        val (txt, kept, dropped) =
-          scrubSentences(t, id, bc.value._1, bc.value._2, n)
-        (id, txt, kept, dropped)
-      }
-      .toDF("doc_id", "clean_text", "n_kept", "n_dropped")
+      maxShared: Int = 4000000): DataFrame =
+    frontierRebuild(docs, Nil, spread = false,
+      sharedSentenceFrontier(docs, n, maxShared))(sentenceScrub(n))
       .orderBy(col("doc_id"))
-  }
 
-  /** The per-doc scrub kernel shared by the batch rebuild scan and
-    * the streaming twin (X20): cut every sentence unit covered by a
+  /** The per-doc sentence-window kernel shared by the batch rebuild
+    * scan and the X20 stream: cut every sentence unit covered by a
     * frontier window whose owner is a LOWER id, concatenate
-    * survivors (units carry their own bytes). Returns
-    * (clean_text, n_kept, n_dropped).
+    * survivors (units carry their own bytes; [[scrubSegments]]).
+    * Returns (clean_text, n_kept, n_dropped).
     */
   private[graft] def scrubSentences(t: String, id: Long,
       keys: Array[Long], owners: Array[Long],
       n: Int): (String, Long, Long) = {
     val units = splitSentenceUnits(t)
-    val hs = sentenceWindowHashes(units, n)
-    val covered = new Array[Boolean](units.length)
-    var i = 0
-    while (i < hs.length) {
-      val slot = java.util.Arrays.binarySearch(keys, hs(i))
-      if (slot >= 0 && owners(slot) < id) {
-        var j = i
-        while (j < i + n) { covered(j) = true; j += 1 }
-      }
-      i += 1
-    }
-    val sb = new java.lang.StringBuilder
-    var kept = 0L
-    var dropped = 0L
-    var u = 0
-    while (u < units.length) {
-      if (covered(u)) dropped += 1
-      else { sb.append(units(u)); kept += 1 }
-      u += 1
-    }
-    (sb.toString, kept, dropped)
+    scrubSegments(units, windowHashes(units, n, 0L), keys, owners, id, n,
+      "")
   }
 
   /** The NEVER-COLLECTS shape of [[sentenceSpanScrub]] (the
@@ -1540,46 +1420,7 @@ object CorpusOps {
     */
   def sentenceSpanScrubJoin(docs: DataFrame, n: Int = 3): DataFrame = {
     require(n >= 2 && n <= 64, s"n out of range: $n")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val ds = docs.select(col("doc_id"), col("text")).as[(Long, String)]
-    val occ = ds
-      .flatMap { case (id, t) =>
-        sentenceWindowHashes(splitSentenceUnits(t), n)
-          .iterator.zipWithIndex.map { case (h, i) => (h, id, i) }
-      }
-      .toDF("h", "doc_id", "pos")
-    val owners = occ.groupBy(col("h"))
-      .agg(min(col("doc_id")).as("owner"))
-    val bad = occ.join(owners, Seq("h"))
-      .filter(col("owner") < col("doc_id"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("pos"))).as("bad"))
-    ds.toDF("doc_id", "text")
-      .join(bad, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("text"),
-        coalesce(col("bad"), array()).as("bad"))
-      .as[(Long, String, Seq[Int])]
-      .map { case (id, t, badPos) =>
-        val units = splitSentenceUnits(t)
-        val covered = new Array[Boolean](units.length)
-        badPos.foreach { p =>
-          var j = p
-          while (j < p + n && j < units.length) { covered(j) = true; j += 1 }
-        }
-        val sb = new java.lang.StringBuilder
-        var kept = 0L
-        var dropped = 0L
-        var u = 0
-        while (u < units.length) {
-          if (covered(u)) dropped += 1
-          else { sb.append(units(u)); kept += 1 }
-          u += 1
-        }
-        (id, sb.toString, kept, dropped)
-      }
-      .toDF("doc_id", "clean_text", "n_kept", "n_dropped")
-      .orderBy(col("doc_id"))
+    spanScrubJoin(docs, n, splitSentenceUnits, windowHashes(_, n, 0L), "")
   }
 
   /** The registered `sentence_span_scrub` query: word soup carries

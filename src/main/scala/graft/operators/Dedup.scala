@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.functions.TextFunctions._
+import graft.plans.Spread
 
 /** Deduplication operators over `documents` (SURVEY §2.3).
   *
@@ -882,20 +883,6 @@ object Dedup {
 
   // ---- shared pieces of the two screen shapes ----
 
-  /** Parallelism floor: a compact parquet input yields few splits
-    * (162 MB at the 100× probe → 2), and with a broadcast join the
-    * whole kernel+join+agg pipeline would run on those few tasks —
-    * the probe measured one task spill-sorting for 20+ min while 31
-    * sat idle. Spread the DOC rows (one row per doc, before the
-    * ~200× shingle fan-out and before the kernel) when the scan is
-    * narrower than the shuffle width; on a real multi-TB input the
-    * scan has plenty of splits and this is a no-op. (Promoted to
-    * [[graft.plans.Spread]] in r20 for the similarity/text kernel
-    * paths; this alias keeps the local call sites.)
-    */
-  private def spreadIfNarrow(df: DataFrame): DataFrame =
-    graft.plans.Spread.spreadIfNarrow(df)
-
   /** No size(keys) > 0 pre-filter: the postings flatMap emits nothing
     * for an empty key array, and a pushed-down filter would run the
     * kernel a second time per row (the PushPredicateThroughNonJoin
@@ -954,8 +941,11 @@ object Dedup {
     */
   private def refListsOf(docs: DataFrame, refMod: Int,
       maxRefDf: Int): DataFrame =
-    packedPostings(
-        shingleKeyed(spreadIfNarrow(docs.filter(col("doc_id") % refMod === 0))),
+    // parallelism floor: spread the DOC rows before the ~200× shingle
+    // fan-out and the kernel — the 100× probe's 2-split scan left one
+    // task spill-sorting for 20+ min while 31 sat idle
+    packedPostings(shingleKeyed(
+        Spread.spreadIfNarrow(docs.filter(col("doc_id") % refMod === 0))),
         "r")
       .groupBy(col("shingle"))
       .agg(collect_list(col("r")).as("rs"))
@@ -988,7 +978,7 @@ object Dedup {
         "you genuinely need every corpus x ref pair")
     val nMask = packMask
     val refLists = refListsOf(docs, refMod, maxRefDf)
-    packedPostings(shingleKeyed(spreadIfNarrow(docs)), "d")
+    packedPostings(shingleKeyed(Spread.spreadIfNarrow(docs)), "d")
       .join(broadcast(refLists), "shingle")
       // NOTE: no (doc, member-list) multiplicity collapse before this
       // explode — measured at the 100× probe, corpus shingles have
@@ -1153,7 +1143,7 @@ object Dedup {
     val bc = spark.sparkContext.broadcast(RefIndex.build(refRows))
     val nMask = packMask
     val maxDf = bc.value.maxLen
-    shingleKeyed(spreadIfNarrow(docs))
+    shingleKeyed(Spread.spreadIfNarrow(docs))
       .as[(Long, Array[Long])]
       .flatMap { case (id, keys) =>
         val idx = bc.value
@@ -1242,7 +1232,7 @@ object Dedup {
     // real scale, zero at oracle scale). The flatMap (not explode) is
     // deliberate: Catalyst re-evaluates a computed array per OUTPUT
     // row under Generate.
-    val postings = spreadIfNarrow(docs)
+    val postings = Spread.spreadIfNarrow(docs)
       .select(col("doc_id"), graft.functions.HashFunctions
         .shingle_keys(col("text"), col("source"), 3).as("keys"))
       .as[(Long, Array[Long])]

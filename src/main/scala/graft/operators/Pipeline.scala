@@ -104,7 +104,9 @@ object Pipeline {
     //    re-attached with a corpus-sized self-join on doc_id — the
     //    join's two exchanges moved the full cleaned text for an
     //    8-byte column (rows identical; PipelineSpec's stagewise pin)
-    val cleaned = CorpusOps.lineDedupWithSource(kept, minDf)
+    val cleaned = CorpusOps.frontierRebuild(kept, Seq("source"),
+        spread = false, CorpusOps.bannedLineFrontier(kept, minDf))(
+        CorpusOps.lineScrub)
       .select(col("doc_id"), col("source"),
         col("clean_text").as("text"),
         length(col("clean_text")).cast("long").as("n_chars"))
@@ -183,12 +185,16 @@ object Pipeline {
       .filter(TextOps.modelQualityScore(col("text")) >= lit(0.5))
     // r20: source carried through the rebuild maps instead of
     // re-attached by corpus-sized doc_id self-joins (the P1 change)
-    val cleaned = CorpusOps.lineDedupWithSource(kept, minDf)
+    val cleaned = CorpusOps.frontierRebuild(kept, Seq("source"),
+        spread = false, CorpusOps.bannedLineFrontier(kept, minDf))(
+        CorpusOps.lineScrub)
       .select(col("doc_id"), col("source"),
         col("clean_text").as("text"))
     val corpus = if (share) graft.plans.Lineage.truncate(cleaned) else cleaned
     // 3'. span-level scrub over the cleaned text + length gate
-    val scrubbed = CorpusOps.substringScrubWithSource(corpus, w)
+    val scrubbed = CorpusOps.frontierRebuild(corpus, Seq("source"),
+        spread = true, CorpusOps.sharedWindowFrontier(corpus, w))(
+        CorpusOps.windowScrub(w))
       .filter(col("n_kept") >= minTokens)
       .select(col("doc_id"), col("source"),
         col("clean_text").as("text"))

@@ -408,7 +408,7 @@ object Similarity {
       .orderBy(col("vec_a"), col("vec_b"))
   }
 
-  /** The band width [[simJoinLshAuto]] picks for a corpus of `n`
+  /** The band width [[simJoinLsh]]'s auto default picks for a corpus of `n`
     * vectors: the smallest power-of-two bit count whose EXPECTED
     * random-collision bucket `n / 2^bits` stays an order of
     * magnitude under `maxBucket`, so the cap only ever bites TRUE
@@ -541,26 +541,6 @@ object Similarity {
     simJoinLsh(spark, sfDir, threshold, nPlanes = bits * bands,
       nBands = bands, maxBucket, sizedWithN = n)
   }
-
-  /** S4-auto — [[simJoinLsh]] with the band width sized from the
-    * corpus (the Clustering.AutoK precedent): at a FIXED band count
-    * the per-band signature space is constant, so background bucket
-    * occupancy grows linearly with the corpus and eventually every
-    * bucket breaches `maxBucket` — at 100× the registry default
-    * (4-bit bands) drops ALL buckets and returns zero pairs (loudly,
-    * via the observe metric, but zero). Auto-sizing keeps expected
-    * random occupancy an order of magnitude under the cap at any
-    * scale; the only extra cost is one bounded count. Fewer, wider
-    * bands trade recall for boundedness exactly as the hand-tuned
-    * probe variant does (recall for near-exact duplicates stays ~1.0
-    * at any width — identical vectors share every signature).
-    */
-  def simJoinLshAuto(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.45, nPlanes: Int = 64,
-      maxBucket: Int = 5000): DataFrame =
-    // auto IS the simJoinLsh default since r17 (nBands = 0 sentinel);
-    // this face stays as the explicit name the registry/probe pin
-    simJoinLsh(spark, sfDir, threshold, nPlanes, nBands = 0, maxBucket)
 
   /** S3 — IVF ANN: k-means centroids fit with `lloydIters` Lloyd
     * iterations (deterministic seed = first `nCells` vectors; each

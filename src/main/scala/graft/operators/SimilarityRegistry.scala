@@ -30,7 +30,7 @@ object SimilarityRegistry {
     // (every bucket over the cap); the auto face stays registered as
     // the explicit S5-auto name, now the same computation
     "sim_join_lsh" -> ((s, d) => Similarity.simJoinLsh(s, d)),
-    "sim_join_lsh_auto" -> ((s, d) => Similarity.simJoinLshAuto(s, d)),
+    "sim_join_lsh_auto" -> ((s, d) => Similarity.simJoinLsh(s, d)),
     // S5-recall contract face at its default contract (θ=0.45,
     // R=0.95): at the harness corpora this SOLVES to the historical
     // 16 bands × 4 bits (the spec's theorem), so the row is non-empty

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.CorpusOps
 
 /** Structured Streaming operators (SURVEY §2.7) — the reference's
   * execution model (unbounded keyed streams with checkpointed state,
@@ -350,64 +351,28 @@ object StreamingOps {
     * line-dedup runs: the frontier is mined offline, arrivals are
     * scrubbed online). Stateless pure projection — no watermark, no
     * state store — so it composes into any `readStream` pipeline; the
-    * broadcast sorted long[] is the same binary-search structure as
-    * the batch rebuild scan, and stream output is asserted identical
-    * to the batch operator on the same rows.
+    * rebuild and its per-doc kernel ARE the batch operator's
+    * ([[graft.operators.CorpusOps.frontierRebuild]] with
+    * `lineScrub`, event time carried), so stream output is asserted
+    * identical to the batch operator on the same rows.
     */
   def streamingLineDedup(docs: Dataset[StreamDoc],
-      bannedSorted: Array[Long]): DataFrame = {
-    import docs.sparkSession.implicits._
-    val bc = docs.sparkSession.sparkContext.broadcast(bannedSorted)
-    docs.map { d =>
-      val ls = d.text.split("\n", -1)
-      val sb = new java.lang.StringBuilder
-      var kept = 0L
-      var dropped = 0L
-      var i = 0
-      while (i < ls.length) {
-        if (java.util.Arrays.binarySearch(bc.value,
-            graft.operators.CorpusOps.lineHash(ls(i))) >= 0) dropped += 1
-        else {
-          if (kept > 0) sb.append('\n')
-          sb.append(ls(i))
-          kept += 1
-        }
-        i += 1
-      }
-      (d.doc_id, d.ts, sb.toString, kept, dropped)
-    }.toDF("doc_id", "ts", "clean_text", "n_kept", "n_dropped")
-  }
+      bannedSorted: Array[Long]): DataFrame =
+    CorpusOps.frontierRebuild(docs.toDF(), Seq("ts"), spread = false,
+      bannedSorted)(CorpusOps.lineScrub)
 
   /** X21 — STREAMING PARAGRAPH DEDUP: X10 at blank-line granularity
     * (T34 streamed) — arrivals lose any paragraph on the
     * historically-mined banned frontier
     * ([[graft.operators.CorpusOps.bannedParagraphFrontier]]),
-    * survivors rejoin with "\n\n"; segment split + hash shared with
-    * the batch operator. Stateless pure map.
+    * survivors rejoin with "\n\n"; rebuild and kernel
+    * (`paragraphScrub`) shared with the batch operator. Stateless
+    * pure map.
     */
   def streamingParagraphDedup(docs: Dataset[StreamDoc],
-      bannedSorted: Array[Long]): DataFrame = {
-    import docs.sparkSession.implicits._
-    val bc = docs.sparkSession.sparkContext.broadcast(bannedSorted)
-    docs.map { d =>
-      val ps = graft.operators.CorpusOps.splitParagraphs(d.text)
-      val sb = new java.lang.StringBuilder
-      var kept = 0L
-      var dropped = 0L
-      var i = 0
-      while (i < ps.length) {
-        if (java.util.Arrays.binarySearch(bc.value,
-            graft.operators.CorpusOps.lineHash(ps(i))) >= 0) dropped += 1
-        else {
-          if (kept > 0) sb.append("\n\n")
-          sb.append(ps(i))
-          kept += 1
-        }
-        i += 1
-      }
-      (d.doc_id, d.ts, sb.toString, kept, dropped)
-    }.toDF("doc_id", "ts", "clean_text", "n_kept", "n_dropped")
-  }
+      bannedSorted: Array[Long]): DataFrame =
+    CorpusOps.frontierRebuild(docs.toDF(), Seq("ts"), spread = false,
+      bannedSorted)(CorpusOps.paragraphScrub)
 
   /** X11 — STREAM-SIDE DSIR SCORING: score each arriving document's
     * target-domain importance log-weight against PRECOMPUTED count
@@ -460,26 +425,19 @@ object StreamingOps {
     * .sharedWindowFrontier]] mined over the historical corpus — the
     * same stream–static split as X10's line dedup: frontier offline,
     * arrivals scrubbed online). Stateless pure projection — no
-    * watermark, no state store; the broadcast (sorted hashes, aligned
-    * owners) pair is the exact structure the batch rebuild scan
-    * binary-searches, and the per-doc kernel IS the batch kernel
-    * ([[graft.operators.CorpusOps.scrubTokens]]), so stream output is
+    * watermark, no state store; the rebuild and its per-doc kernel
+    * ARE the batch operator's ([[graft.operators.CorpusOps
+    * .frontierRebuild]] with `windowScrub`, i.e.
+    * [[graft.operators.CorpusOps.scrubTokens]]), so stream output is
     * asserted identical to the batch operator under the same
     * frontier. Arrivals carry ids above the historical range, so
     * every frontier hit scrubs (owner < id always) — exactly the
     * deploy semantics: history owns its spans, arrivals lose copies.
     */
   def streamingSubstringScrub(docs: Dataset[StreamDoc],
-      frontier: (Array[Long], Array[Long]), w: Int = 8): DataFrame = {
-    import docs.sparkSession.implicits._
-    val bc = docs.sparkSession.sparkContext.broadcast(frontier)
-    docs.map { d =>
-      val (txt, kept, dropped) = graft.operators.CorpusOps.scrubTokens(
-        graft.operators.CorpusOps.duckTokens(d.text), d.doc_id,
-        bc.value._1, bc.value._2, w)
-      (d.doc_id, d.ts, txt, kept, dropped)
-    }.toDF("doc_id", "ts", "clean_text", "n_kept", "n_dropped")
-  }
+      frontier: (Array[Long], Array[Long]), w: Int = 8): DataFrame =
+    CorpusOps.frontierRebuild(docs.toDF(), Seq("ts"), spread = false,
+      frontier)(CorpusOps.windowScrub(w))
 
   /** X20 — STREAMING SENTENCE-SPAN SCRUB: arrivals scrubbed at the
     * LITERAL C4 dedup unit (T35) against the shared-window frontier
@@ -487,20 +445,15 @@ object StreamingOps {
     * ([[graft.operators.CorpusOps.sharedSentenceFrontier]]) — the
     * X12 substring-scrub recipe at sentence granularity, completing
     * the streamed C4 pair (X19 gates pages, X20 cuts spans already
-    * owned by the resident corpus). Kernel shared with batch
-    * (`scrubSentences`); stateless pure map, output asserted
-    * identical to the batch operator under one frontier.
+    * owned by the resident corpus). Rebuild and kernel shared with
+    * batch (`sentenceScrub`, i.e. `scrubSentences`); stateless pure
+    * map, output asserted identical to the batch operator under one
+    * frontier.
     */
   def streamingSentenceScrub(docs: Dataset[StreamDoc],
-      frontier: (Array[Long], Array[Long]), n: Int = 3): DataFrame = {
-    import docs.sparkSession.implicits._
-    val bc = docs.sparkSession.sparkContext.broadcast(frontier)
-    docs.map { d =>
-      val (txt, kept, dropped) = graft.operators.CorpusOps
-        .scrubSentences(d.text, d.doc_id, bc.value._1, bc.value._2, n)
-      (d.doc_id, d.ts, txt, kept, dropped)
-    }.toDF("doc_id", "ts", "clean_text", "n_kept", "n_dropped")
-  }
+      frontier: (Array[Long], Array[Long]), n: Int = 3): DataFrame =
+    CorpusOps.frontierRebuild(docs.toDF(), Seq("ts"), spread = false,
+      frontier)(CorpusOps.sentenceScrub(n))
 
   /** X13 — STREAM-SIDE NB CLASSIFICATION: route each arriving
     * document to its argmax class under a PRECOMPUTED Naive Bayes
@@ -706,35 +659,16 @@ object StreamingOps {
     * frontier keyed by (domain, line) — arrivals lose any line the
     * historical corpus marked as THEIR OWN SITE's chrome
     * ([[graft.operators.CorpusOps.bannedDomainLineFrontier]]); the
-    * same line on a domain with no history survives. Hash identity
-    * IS the batch [[graft.operators.CorpusOps.siteLineHash]] (one
-    * definition, both faces); stateless pure map, event time carried.
+    * same line on a domain with no history survives. Rebuild and
+    * kernel (`domainLineScrub`, hashing through
+    * [[graft.operators.CorpusOps.siteLineHash]]) ARE the batch
+    * operator's (one definition, both faces); stateless pure map,
+    * event time carried.
     */
   def streamingDomainLineDedup(docs: Dataset[StreamSiteDoc],
-      bannedSorted: Array[Long]): DataFrame = {
-    import docs.sparkSession.implicits._
-    val bc = docs.sparkSession.sparkContext.broadcast(bannedSorted)
-    docs.map { d =>
-      val ls = d.text.split("\n", -1)
-      val sb = new java.lang.StringBuilder
-      var kept = 0L
-      var dropped = 0L
-      var i = 0
-      while (i < ls.length) {
-        if (java.util.Arrays.binarySearch(bc.value,
-            graft.operators.CorpusOps.siteLineHash(d.domain, ls(i)))
-            >= 0) dropped += 1
-        else {
-          if (kept > 0) sb.append('\n')
-          sb.append(ls(i))
-          kept += 1
-        }
-        i += 1
-      }
-      (d.doc_id, d.ts, d.domain, sb.toString, kept, dropped)
-    }.toDF("doc_id", "ts", "domain", "clean_text", "n_kept",
-      "n_dropped")
-  }
+      bannedSorted: Array[Long]): DataFrame =
+    CorpusOps.frontierRebuild(docs.toDF(), Seq("ts", "domain"),
+      spread = false, bannedSorted)(CorpusOps.domainLineScrub)
 
   /** X25 — STREAMING QUALITY SIGNALS: every arriving document gets
     * its full T38 signals row the moment it lands — all five gate

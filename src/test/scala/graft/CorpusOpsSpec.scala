@@ -536,7 +536,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException] {
       substringScrub(docs, maxShared = 3).collect()
     }
-    assert(e.getMessage.contains("maxShared"))
+    assert(e.getMessage.contains("exceeds maxShared="))
   }
 
   test("lineDedup guards the banned-frontier driver collect") {
@@ -546,7 +546,32 @@ class CorpusOpsSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException] {
       lineDedup(docs, minDf = 2, maxBanned = 1).collect()
     }
-    assert(e.getMessage.contains("maxBanned"))
+    assert(e.getMessage.contains("exceeds maxBanned="))
+  }
+
+  test("paragraph, domain-line and sentence-span frontiers refuse an " +
+      "over-budget frontier and name their budget") {
+    import graft.operators.CorpusOps.{domainLineDedup, paragraphDedup,
+      sentenceSpanScrub}
+    // three identical docs: every segment is shared by all three, so
+    // each frontier holds >= 2 entries against a budget of 1
+    def thrice(t: String) = Seq((0L, t), (1L, t), (2L, t))
+    val paragraphs = thrice("a\n\nb").toDF("doc_id", "text")
+    val sites = thrice("a\nb").map { case (id, t) => (id, "x.com", t) }
+      .toDF("doc_id", "domain", "text")
+    val sentences = thrice("A. B! C? D.").toDF("doc_id", "text")
+    val faces = Seq[(String, String, () => org.apache.spark.sql.DataFrame)](
+      ("paragraphDedup", "maxBanned",
+        () => paragraphDedup(paragraphs, minDf = 2, maxBanned = 1)),
+      ("domainLineDedup", "maxBanned",
+        () => domainLineDedup(sites, minDf = 2, maxBanned = 1)),
+      ("sentenceSpanScrub", "maxShared",
+        () => sentenceSpanScrub(sentences, maxShared = 1)))
+    faces.foreach { case (face, budget, run) =>
+      val e = intercept[IllegalArgumentException](run().collect())
+      assert(e.getMessage.contains(s"exceeds $budget="),
+        s"$face did not name $budget: ${e.getMessage}")
+    }
   }
 
   test("lineDedupQuery matches an exact in-driver line-df reference") {

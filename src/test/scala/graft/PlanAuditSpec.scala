@@ -523,6 +523,55 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(exchanges <= 1, s"$exchanges data exchanges:\n$plan")
   }
 
+  test("frontier scrub family: every rebuild is join-free with the " +
+      "face's orderBy as its one data exchange; the pipelines' " +
+      "carried-source rebuild has none") {
+    import graft.operators.CorpusOps
+    def dataExchanges(plan: String): Int = plan.linesIterator.count(l =>
+      l.contains("Exchange") && !l.contains("BroadcastExchange") &&
+        !l.contains("RoundRobinPartitioning"))
+    def spreads(plan: String): Int =
+      plan.linesIterator.count(_.contains("RoundRobinPartitioning"))
+    // (domain_line_dedup: the test above)
+    val faces = Seq(
+      "line_dedup" -> CorpusOps.lineDedupQuery(spark, sf),
+      "paragraph_dedup" -> CorpusOps.paragraphDedupQuery(spark, sf),
+      "substring_scrub" -> CorpusOps.substringScrubQuery(spark, sf),
+      "sentence_span_scrub" -> CorpusOps.sentenceSpanScrubQuery(spark, sf))
+    faces.foreach { case (name, df) =>
+      val plan = planOf(df)
+      assert(!plan.contains("Join"), s"$name: unexpected join:\n$plan")
+      assert(!plan.contains("Window"), s"$name: unexpected window:\n$plan")
+      assert(dataExchanges(plan) <= 1,
+        s"$name: ${dataExchanges(plan)} data exchanges:\n$plan")
+      // the token-window rebuild keeps its parallelism-floor spread
+      // (a no-op on any multi-split scan); no other face spreads
+      assert(spreads(plan) <= (if (name == "substring_scrub") 1 else 0),
+        s"$name: ${spreads(plan)} round-robin spreads:\n$plan")
+    }
+    // the rebuilds pipeline_full and pipeline_scrub run, carrying
+    // `source`: text never shuffles, and `source` is never re-attached
+    // by a join
+    val docs = graft.Tables.documents(spark, sf)
+    val carried = Seq(
+      "line" -> CorpusOps.frontierRebuild(docs, Seq("source"),
+        spread = false, CorpusOps.bannedLineFrontier(docs))(
+        CorpusOps.lineScrub),
+      "window" -> CorpusOps.frontierRebuild(docs, Seq("source"),
+        spread = true, CorpusOps.sharedWindowFrontier(docs))(
+        CorpusOps.windowScrub(8)))
+    carried.foreach { case (name, df) =>
+      assert(df.columns.toSeq ==
+        Seq("doc_id", "source", "clean_text", "n_kept", "n_dropped"))
+      val plan = planOf(df)
+      assert(!plan.contains("Join"), s"$name: unexpected join:\n$plan")
+      assert(dataExchanges(plan) == 0,
+        s"$name: ${dataExchanges(plan)} data exchanges:\n$plan")
+      assert(spreads(plan) <= (if (name == "window") 1 else 0),
+        s"$name: ${spreads(plan)} round-robin spreads:\n$plan")
+    }
+  }
+
   test("holdout_carve classification: one scan, no join, no agg") {
     val plan = planOf(
       graft.operators.Dedup.holdoutCarveQuery(spark, sf))

@@ -129,7 +129,7 @@ class SimilaritySpec extends AnyFunSuite {
     // the auto face and an EXPLICIT 16-band call are the SAME
     // computation (simJoinLsh itself defaults to auto since r17)
     val sf01 = "/root/testdata/sf0.01"
-    val auto = pairSet(Similarity.simJoinLshAuto(spark, sf01, 0.45))
+    val auto = pairSet(Similarity.simJoinLsh(spark, sf01, 0.45))
     val fixed = pairSet(Similarity.simJoinLsh(spark, sf01, 0.45,
       nBands = 16))
     assert(auto == fixed)
